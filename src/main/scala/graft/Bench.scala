@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line on stdout.
   *
@@ -61,19 +59,9 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // bytes-derived partitions (floors at cpus for sf<=1, so bench
-      // numbers at sf0.1 are unchanged; scales up for sf10/sf100 probes)
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.partitionsFor(sfDir, cpus.toInt))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .getOrCreate()
+    // bytes-derived partitions (floors at cpus for sf<=1, so bench
+    // numbers at sf0.1 are unchanged; scales up for sf10/sf100 probes)
+    val spark = GraftSession.builder(master = s"local[$cpus]", sfDir = sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def materialize(name: String): Unit =

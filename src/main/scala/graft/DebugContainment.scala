@@ -9,7 +9,11 @@ import org.apache.spark.sql.GraftColumnBridge
 object DebugContainment {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.builder(master = "local[32]", sfDir = sfDir).getOrCreate()
+    // The partition floor is SPARK_GRAFT_CPUS (4 unset), not the master's 32
+    // cores: the probe's readings were taken with that floor.
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+    val spark = GraftSession.builder(master = "local[32]",
+      shufflePartitions = GraftSession.partitionsFor(sfDir, cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.functions.Text
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** r15 dev probe: time the fin statements-derivation STAGES in
   * isolation (noop sink, 2 runs each) so the in-query fin wall can be
   * attributed to format/ffill/parse/upsert rather than guessed.
@@ -11,16 +9,7 @@ import org.apache.spark.sql.SparkSession
 object DevProbeR15 {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val shuffle = GraftSession.partitionsFor(sfDir, 32)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(master = "local[32]", sfDir = sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
     def frames: Map[String, () => org.apache.spark.sql.DataFrame] = Map(

@@ -62,14 +62,46 @@ object GraftSession {
         s"SPARK_GRAFT_SHUFFLE must be a positive integer, got '$v'"))
     }.getOrElse(shufflePartitionsFor(inputBytes(sfDir), cpus))
 
+  /** Generated classes Spark keeps per JVM (`spark.sql.codegen.cache.maxEntries`,
+    * a static conf read once, when `CodeGenerator` first initializes).
+    * Spark's default of 100 is smaller than the working set of a session
+    * that re-runs a handful of reports: five small registry queries
+    * compile about 190 classes on their first runs, so an LRU of 100
+    * evicts every class before its query runs again and each re-run pays
+    * the full compile (43% of such a pass). 1000 holds that working set
+    * five times over.
+    *
+    * Cost, measured on JDK 17 after one pass over the whole registry at
+    * sf0.001: 3146 cached classes held 67 MB of heap (21.9 KB each: the
+    * source text that keys the entry, the class and its stats) and 26 MB
+    * of metaspace, so a full cache of 1000 costs about 22 MB of heap.
+    * The cap does not cover a registry-wide pass, whose 3146 classes
+    * (1952 distinct sources; query planning and tasks run under
+    * different class loaders, each keying its own copy) still cycle
+    * through it, so each of `Bench`'s passes compiles every query again;
+    * covering those would take a cap near 3500 and about 75 MB of heap. */
+  private[graft] val CodegenCacheEntries: Int = 1000
+
+  private val LocalMaster = """local\[(\d+|\*)\]""".r
+
+  /** Core count of a `local[N]` or `local[*]` master: the shuffle-partition
+    * floor of a session that names no partition count. */
+  private[graft] def coresOf(master: String): Int = master match {
+    case LocalMaster("*") => Runtime.getRuntime.availableProcessors()
+    case LocalMaster(n) => n.toInt
+    case _ => throw new IllegalArgumentException(
+      s"no core count in master '$master': pass shufflePartitions")
+  }
+
+  /** The one session factory: every graft main and spec builds its
+    * session here, so all of them run under the same confs. */
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
               shufflePartitions: Int = -1,
               sfDir: String = ""): SparkSession.Builder = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
     val parts =
       if (shufflePartitions > 0) shufflePartitions
-      else if (sfDir.nonEmpty) partitionsFor(sfDir, cpus)
-      else cpus
+      else if (sfDir.nonEmpty) partitionsFor(sfDir, coresOf(master))
+      else coresOf(master)
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -84,6 +116,11 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
       // default; read as Long (ns since epoch) and normalize in Tables.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Under AQE a stage's codegen id follows the order its sibling
+      // stages finished in, so with the id in the class name the same
+      // stage code re-compiled whenever that order changed.
+      .config("spark.sql.codegen.useIdInClassName", "false")
   }
 
   def get(): SparkSession = {

@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** r15 dev tool: TimeQ with the UI enabled so the REST API
   * (localhost:4040/api/v1) can attribute wall time to stages while a
   * query runs — the guide §7.1 loop without a browser. */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val shuffle = GraftSession.partitionsFor(sfDir, 32)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = GraftSession.builder(master = "local[32]", sfDir = sfDir)
       .config("spark.ui.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { n =>

@@ -1,21 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Partition count derives from the dataset's on-disk bytes (the r12
     // sf100 lesson: AQE coalesces a too-fine map side but cannot split a
     // too-coarse one); SPARK_GRAFT_SHUFFLE still overrides for probes.
-    val shuffle = GraftSession.partitionsFor(sfDir, 32)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64*1024*1024).toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(master = "local[32]", sfDir = sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try SparkEntry.queries("q1_agg")(spark, sfDir).write.format("noop").mode("overwrite").save() catch { case _: Throwable => }
     args.foreach { n =>

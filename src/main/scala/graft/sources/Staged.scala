@@ -19,7 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sf100 before r14's cleanup).
   */
 object Staged {
+  /** Cache key -> staged dir of every build that completed. */
   private val paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Every dir created, a failed build's included; removed at JVM exit. */
+  private[graft] val created = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
@@ -27,7 +30,15 @@ object Staged {
   }
 
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    paths.values().forEach(p => deleteRecursively(new java.io.File(p)))))
+    created.forEach(p => deleteRecursively(new java.io.File(p)))))
+
+  /** A new temp dir, registered for removal before anything is written
+    * to it, so a build that throws leaves nothing behind at exit. */
+  private def tempDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    created.add(p)
+    p
+  }
 
   /** (n_files, total_bytes, max_mtime) walk — cheap relative to any
     * staging job, and enough to catch replace/append within a JVM. */
@@ -52,8 +63,7 @@ object Staged {
     * read through the OS page cache. NOT cached across calls — each
     * call writes its own dir. */
   def ephemeral(df: DataFrame): DataFrame = {
-    val p = java.nio.file.Files.createTempDirectory("graft-ephem-").toString
-    paths.put(s"ephem:$p", p)
+    val p = tempDir("graft-ephem-")
     df.write.mode("overwrite").parquet(p)
     df.sparkSession.read.parquet(p)
   }
@@ -69,7 +79,7 @@ object Staged {
             partitionBy: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
     val key = s"$name|$dir|${fingerprint(dir)}"
     val path = paths.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files.createTempDirectory(s"graft-$name-").toString
+      val p = tempDir(s"graft-$name-")
       if (partitionBy.isEmpty) build.write.mode("overwrite").parquet(p)
       else Ingest.writePartitioned(build, p, partitionBy)
       p
@@ -88,7 +98,7 @@ object Staged {
                (build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
     val key = s"$name|$dir|${fingerprint(dir)}"
     val path = paths.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files.createTempDirectory(s"graft-$name-").toString
+      val p = tempDir(s"graft-$name-")
       val (a, b) = build
       if (partitionBy1.isEmpty) a.write.mode("overwrite").parquet(s"$p/a")
       else Ingest.writePartitioned(a, s"$p/a", partitionBy1)

@@ -583,18 +583,12 @@ object Warehouse {
     * exactly this kind of table and every downstream reader just scans
     * it. The staged trend/ytd variants below are that production shape,
     * oracled against the SAME SQL as their in-query twins (the parquet
-    * round-trip is bit-exact for every column). The temp table lives for
-    * the JVM; the write happens at first construction (like factStaged,
-    * not for plan-only tooling). */
-  private val stagedPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def stagedUpserted(spark: SparkSession, dir: String): DataFrame = {
-    val path = stagedPaths.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-staged-").toString
-      graft.sources.Ingest.writePartitioned(upserted(spark, dir), p, Seq("year", "month"))
-      p
-    })
-    spark.read.parquet(path)
-  }
+    * round-trip is bit-exact for every column). It is a Staged.table:
+    * re-staged when the dir's content changes, removed at JVM exit; the
+    * write happens at first construction (not for plan-only tooling). */
+  def stagedUpserted(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Staged.table(spark, "staged", dir, partitionBy = Seq("year", "month"))(
+      upserted(spark, dir))
 
   /** fin_trend_mom: month-over-month movement per (department, GL). */
   def finTrendMom(spark: SparkSession, dir: String): DataFrame =

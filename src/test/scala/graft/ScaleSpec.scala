@@ -209,4 +209,10 @@ class ScaleSpec extends SparkSpec {
     assert(b001 > 0 && b01 > b001)
     assert(GraftSession.inputBytes("/no/such/dir") == 0L)
   }
+
+  test("the partition floor is the core count of the builder's local master") {
+    assert(GraftSession.coresOf("local[32]") == 32)
+    assert(GraftSession.coresOf("local[*]") == Runtime.getRuntime.availableProcessors())
+    assertThrows[IllegalArgumentException](GraftSession.coresOf("yarn"))
+  }
 }

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.{Ingest, Tables}
+import graft.sources.{Ingest, Staged, Tables}
 import graft.warehouse.{Statements, Warehouse}
+import scala.jdk.CollectionConverters._
 
 /** Round-trip specs for the non-parquet sources and partitioned sink. */
 class SourcesSpec extends SparkSpec {
@@ -79,5 +80,12 @@ class SourcesSpec extends SparkSpec {
     assert(scan.contains("PartitionFilters") && scan.contains("(year"),
       s"expected year partition filter in staged scan:\n$scan")
     assert(one.count() == staged.filter(col("year") === years.max).count())
+  }
+
+  test("a staged build that throws still leaves its temp dir registered for removal") {
+    val name = s"failing${System.nanoTime()}"
+    intercept[IllegalStateException](
+      Staged.table(spark, name, sf)(throw new IllegalStateException("build failed")))
+    assert(Staged.created.asScala.exists(_.contains(s"graft-$name-")))
   }
 }

@@ -52,6 +52,16 @@ class WarehouseSpec extends SparkSpec {
       "phantom prior-decade keys from the existing batch should survive")
   }
 
+  test("stagedUpserted reads back exactly the upserted rows") {
+    val up = Warehouse.upserted(spark, sf)
+    val staged = Warehouse.stagedUpserted(spark, sf)
+    // partition discovery re-infers the key columns' types: read back as written
+    val asWritten = staged.select(up.schema.map(f => col(f.name).cast(f.dataType)): _*)
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    val rows = sorted(up)
+    assert(rows.nonEmpty && sorted(asWritten) == rows)
+  }
+
   test("balance sheet state machine: categories ordered Assets -> Liability -> Equity") {
     val rows = SparkEntry.queries("fin_balance_sheet")(spark, sf)
       .select("sheet", "pos", "category").collect()
