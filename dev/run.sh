@@ -1,5 +1,7 @@
 #!/bin/bash
 # Run a graft main class fast (no sbt startup): dev/run.sh graft.Verify <args...>
+# The mains: graft.Verify, graft.Bench, graft.MakeScale, graft.DebugContainment
+# and the dev loop graft.Dev <sfDir> <plan|codegen|final-plan|time> <query>...
 CLS="$1"; shift
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line on stdout.
   *
@@ -53,17 +55,34 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // local[32] is the prescribed bench config (TESTDATA/driver contract);
-    // r2-r9 defaulted to local[4] and left the box 8x under-driven — the
-    // r10 BASELINE row records the alignment so rounds stay comparable.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    // bytes-derived partitions (floors at cpus for sf<=1, so bench
-    // numbers at sf0.1 are unchanged; scales up for sf10/sf100 probes)
-    val spark = GraftSession.builder(master = s"local[$cpus]", sfDir = sfDir).getOrCreate()
+    // bytes-derived partitions (floors at the core count for sf<=1, so
+    // bench numbers at sf0.1 are unchanged; scales up for sf10/sf100)
+    val spark = GraftSession.builder(sfDir = sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    report(sfDir, time(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted, passes))
+    spark.stop()
+  }
 
+  /** Round-robin passes per query: SPARK_GRAFT_BENCH_PASSES, else 3. */
+  private[graft] def passes: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+
+  /** What one run of [[time]] measured: each query's min and median
+    * seconds (failed queries left out, with their first error), each
+    * pass's summed seconds and each pass's calibration reading (-1 when
+    * it failed, `calibError` holding the first reason). */
+  private[graft] final case class Timings(
+      mins: Seq[(String, Double)],
+      medians: Seq[(String, Double)],
+      errors: Map[String, String],
+      passTotals: Seq[Double],
+      calibs: Seq[Double],
+      calibError: Option[String])
+
+  /** The timing loop of Bench and `graft.Dev time`: a warm-up, then
+    * `passes` round-robin passes over `names`, each opened by the
+    * calibration probe, materializing every query with a noop write. */
+  private[graft] def time(spark: SparkSession, sfDir: String, names: Seq[String],
+                          passes: Int): Timings = {
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
@@ -104,10 +123,6 @@ object Bench {
     def calibError: Option[String] = calibGuard.firstError
     tryCalibrate() // calib's own warmup
 
-    // dev loop: SPARK_GRAFT_BENCH_ONLY=a,b,c times a subset (driver unset)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     var errors = Map.empty[String, String]
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val calibs = scala.collection.mutable.ListBuffer.empty[Double]
@@ -136,15 +151,20 @@ object Bench {
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
 
+    val ok = names.filterNot(errors.contains)
+    Timings(ok.map(n => n -> samples(n).min), ok.map(n => n -> median(samples(n))),
+      errors, passTotals, calibs.toSeq, calibError)
+  }
+
+  /** Prints the `#diag` line and the headline, then writes the sidecar. */
+  private def report(sfDir: String, t: Timings): Unit = {
+    val Timings(mins, meds, errors, passTotals, calibs, calibError) = t
     def jstr(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
         case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
       } + "\""
-    val ok = names.filterNot(errors.contains)
     def ms(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val mins = ok.map(n => n -> samples(n).min)
-    val meds = ok.map(n => n -> median(samples(n)))
     def jmap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => s"${jstr(k)}:${ms(v)}" }.mkString("{", ",", "}")
     val es = errors.toSeq.sorted.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
@@ -172,7 +192,7 @@ object Bench {
     // stdout still carries the same one-line headline contract).
     println(s"""#diag {"pass_totals":$pts,"passes":$passes,"calib_passes":$calibArr,"queries_median":${jmap(meds)},"queries":${jmap(mins)}}""")
     val calibErr = calibError.map(e => s""","calib_error":${jstr(e)}""").getOrElse("")
-    val headline = s"""{"metric":"total","value":${ms(total)},"value_median":${ms(totalMed)},"pass_totals":$pts,"unit":"sec","n_queries":${ok.size},"errors":$es,"passes":$passes,"calib_s":$calibS$calibErr,"calib_passes":$calibArr,"sf":"$sfDir"}"""
+    val headline = s"""{"metric":"total","value":${ms(total)},"value_median":${ms(totalMed)},"pass_totals":$pts,"unit":"sec","n_queries":${mins.size},"errors":$es,"passes":$passes,"calib_s":$calibS$calibErr,"calib_passes":$calibArr,"sf":"$sfDir"}"""
     println(headline)
     try {
       val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "BENCH_PERQUERY.json")
@@ -180,7 +200,6 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
         (full + "\n").getBytes("UTF-8")): Unit
     } catch { case scala.util.control.NonFatal(_) => () } // sidecar is best-effort
-    spark.stop()
   }
 }
 

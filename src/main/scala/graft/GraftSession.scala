@@ -54,13 +54,24 @@ object GraftSession {
     math.min(MaxShufflePartitions, math.max(cpus, fromBytes))
   }
 
+  /** The value `v` of env var `name` as a positive integer; anything
+    * else fails here, naming the variable, rather than later in Spark. */
+  private def positiveInt(name: String, v: String): Int =
+    v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$name must be a positive integer, got '$v'"))
+
   /** Partition count for a session over `sfDir`: env override first,
     * then the bytes rule. */
   def partitionsFor(sfDir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE").map { v =>
-      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_SHUFFLE must be a positive integer, got '$v'"))
-    }.getOrElse(shufflePartitionsFor(inputBytes(sfDir), cpus))
+    sys.env.get("SPARK_GRAFT_SHUFFLE").map(positiveInt("SPARK_GRAFT_SHUFFLE", _))
+      .getOrElse(shufflePartitionsFor(inputBytes(sfDir), cpus))
+
+  /** The core count of a session that names no master, given the value
+    * of SPARK_GRAFT_CPUS: that value when set, else min(32, nproc), the
+    * core count the sf0.1 bench is specified at. */
+  private[graft] def defaultCpus(env: Option[String]): Int =
+    env.map(positiveInt("SPARK_GRAFT_CPUS", _))
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
 
   /** Generated classes Spark keeps per JVM (`spark.sql.codegen.cache.maxEntries`,
     * a static conf read once, when `CodeGenerator` first initializes).
@@ -95,7 +106,7 @@ object GraftSession {
 
   /** The one session factory: every graft main and spec builds its
     * session here, so all of them run under the same confs. */
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
+  def builder(master: String = s"local[${defaultCpus(sys.env.get("SPARK_GRAFT_CPUS"))}]",
               shufflePartitions: Int = -1,
               sfDir: String = ""): SparkSession.Builder = {
     val parts =
@@ -121,11 +132,5 @@ object GraftSession {
       // stages finished in, so with the id in the class name the same
       // stage code re-compiled whenever that order changed.
       .config("spark.sql.codegen.useIdInClassName", "false")
-  }
-
-  def get(): SparkSession = {
-    val spark = builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 }

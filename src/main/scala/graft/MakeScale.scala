@@ -25,7 +25,7 @@ object MakeScale {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/graft-sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = GraftSession.get()
+    val spark = GraftSession.builder(sfDir = src).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")

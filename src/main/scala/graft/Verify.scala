@@ -19,9 +19,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val avail = Runtime.getRuntime.availableProcessors()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", math.min(16, avail).toString)
-    val spark = GraftSession.builder(master = s"local[$cpus]", sfDir = sfDir).getOrCreate()
+    val spark = GraftSession.builder(sfDir = sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
@@ -59,7 +57,7 @@ object Verify {
     // Small pool of concurrent dump workers: each query at sf0.01 uses a
     // handful of tasks, so 4 in flight keeps local[N] cores busy without
     // thrashing the scheduler. FIFO pool keeps failures attributable.
-    val workers = math.max(1, math.min(4, cpus.toInt / 4))
+    val workers = math.max(1, math.min(4, spark.sparkContext.defaultParallelism / 4))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)
     val failures = new java.util.concurrent.atomic.AtomicInteger(0)
     todo.foreach { case (name, fn) =>

@@ -67,9 +67,6 @@ object Financial {
     when(intPart =!= "", lpad(intPart, 4, "0"))
   }
 
-  /** True iff the value is a valid (4-digit-normalizable) GL code. */
-  def isGlCode(raw: Column): Column = normalizeGlCode(raw).isNotNull
-
   /** Month number (1-12) → English month name, as the reference writes to
     * the warehouse (build_warehouse.py:202). */
   def monthName(monthNum: Column): Column = {

@@ -1293,12 +1293,6 @@ object Ann {
   def annIvfPqTopk(spark: SparkSession, dir: String): DataFrame =
     annIvfPqTopkImpl(spark, emb(spark, dir), residual = true)
 
-  /** The non-residual composed variant, kept ONLY as AnnSpec's recall
-    * yardstick for the residual upgrade: same index, same 4-bit byte
-    * budget, codes on u instead of u − c(cell). Not registered. */
-  private[graft] def annIvfPqTopkNoRes(spark: SparkSession, dir: String): DataFrame =
-    annIvfPqTopkImpl(spark, emb(spark, dir), residual = false)
-
   /** Spec entry point: either composed variant over an arbitrary
     * (vec_id, v) corpus frame (queries = vec_id < NQueries). */
   private[graft] def annIvfPqTopkOn(spark: SparkSession, e: DataFrame,

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Staged, Tables}
 
 /** Data-LAYOUT analytics (SURVEY.md §2H extension): at 100 TB the
   * cheapest scan is the one zone maps skip, and the layout DECISION —
@@ -144,9 +144,10 @@ object Layout {
     * shuffle + one pass); the re-read aggregates per file with
     * input_file_name() — ONE scan, map-side-combined to ≤ Files
     * groups. The sink lands in the local tmp dir keyed by the input
-    * dir (never inside the read-only testdata). */
+    * dir (never inside the read-only testdata), and is removed at JVM
+    * exit with the staged tables. */
   def layoutZorderApply(spark: SparkSession, dir: String): DataFrame = {
-    val sink = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_apply_${java.lang.Integer.toHexString(dir.hashCode)}"
+    val sink = Staged.register(s"${System.getProperty("java.io.tmpdir")}/graft_zorder_apply_${java.lang.Integer.toHexString(dir.hashCode)}")
     bucketed(spark, dir).select(col("p"), col("s"), col("zb"))
       .repartition(Files, col("zb"))
       .sortWithinPartitions(col("zb"))

@@ -32,13 +32,16 @@ object Staged {
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     created.forEach(p => deleteRecursively(new java.io.File(p)))))
 
-  /** A new temp dir, registered for removal before anything is written
-    * to it, so a build that throws leaves nothing behind at exit. */
-  private def tempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+  /** Registers dir `p` for removal at JVM exit; callers register before
+    * anything is written to it, so a build that throws leaves nothing
+    * behind. */
+  private[graft] def register(p: String): String = {
     created.add(p)
     p
   }
+
+  private def tempDir(prefix: String): String =
+    register(java.nio.file.Files.createTempDirectory(prefix).toString)
 
   /** (n_files, total_bytes, max_mtime) walk — cheap relative to any
     * staging job, and enough to catch replace/append within a JVM. */

@@ -15,9 +15,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * negations of the old (cohort, offset) rows and re-emits them under
   * the new cohort. Summing all deltas per (cohort, offset) therefore
   * reproduces the batch aggregate exactly on ANY arrival order
-  * (CohortStreamSpec pins row-equality against the registered
-  * orders_cohort_ltv derivation, cohort_size/cum/ltv reconstructed the
-  * same way the batch query derives them).
+  * (StreamingSpec's "cohortDeltaStream deltas reconstruct
+  * orders_cohort_ltv exactly on scrambled arrivals" pins row-equality
+  * against the registered derivation, cohort_size/cum/ltv reconstructed
+  * the same way the batch query derives them).
   *
   * Scale: state is per-customer and MONTH-bounded — one cohort int +
   * a (midx → rev_cents) map capped by the calendar, never by order

@@ -8,8 +8,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * first_purchase-after-that) maintained incrementally, emitting a
   * snapshot row whenever a user's funnel coordinates change. A
   * downstream upsert sink (last snapshot per user) IS the live funnel
-  * dashboard; FunnelStreamSpec folds exactly that and pins row-equality
-  * against the registered batch query on scrambled arrivals.
+  * dashboard; StreamingSpec's "funnelStream snapshots reconstruct
+  * events_funnel exactly on scrambled arrivals" folds exactly that and
+  * pins row-equality against the registered batch query.
   *
   * The hard part a windowed aggregate cannot express: the funnel's
   * anchors CASCADE — a late-arriving EARLIER view moves first_view,

@@ -90,43 +90,6 @@ object Warehouse {
       .select(cols.map(col): _*)
   }
 
-  /** The statements derivation with the ffill window running over a
-    * PRE-PARSED, narrow payload — the derived-statements fast path
-    * (guide §2.3 project-before-the-exchange, §8 shuffle small rows).
-    * month/year/department/gl_code/amount and the section marker are
-    * all computed from the raw strings BEFORE the ffill exchange (none
-    * of them depends on `category`, so they commute with the fill), and
-    * the window partitions on the parsed (year, month, department) — a
-    * bijection of (file, sheet) for the derived frame ("Financials
-    * MM.YYYY.xlsx" / "DEPARTMENT NNN-F"), so partition membership and
-    * the pos order within each partition are IDENTICAL — while the
-    * exchange carries ints + a 4-char code instead of two ~20-char
-    * formatted names + raw label/amount strings, and the window sort
-    * compares ints, not strings. The raw→parse chain still runs on
-    * every row, fused with the scan; only redundant string bytes stop
-    * traveling. Valid ONLY for the derived statements frame
-    * (WarehouseSpec pins row equality against the generic factFrom
-    * path); ingested statement frames keep the generic path. */
-  private[graft] def factNarrow(spark: SparkSession, dir: String): DataFrame = {
-    val s = Statements.income(spark, dir)
-    val lbl = upper(trim(col("label")))
-    val marker = when(lbl === "REVENUES", "Revenue").when(lbl === "EXPENSES", "Expenses")
-    val pre = s.select(
-      Financial.periodMonth(col("file")).as("month"),
-      Financial.periodYear(col("file")).as("year"),
-      Financial.extractDepartment(col("sheet")).as("department"),
-      col("pos"),
-      Financial.normalizeGlCode(col("label")).as("gl_code"),
-      Financial.cleanAmount(col("amount_str")).as("amount"),
-      marker.as("__mk"))
-    val w = Window.partitionBy(col("year"), col("month"), col("department"))
-      .orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pre.withColumn("category", last(col("__mk"), ignoreNulls = true).over(w))
-      .filter(col("gl_code").isNotNull && col("amount").isNotNull)
-      .select("pos", "gl_code", "category", "year", "month", "department", "amount")
-  }
-
   /** Fact + broadcast GL reference + missing-mapping flag
     * (build_warehouse.py:139-141). */
   def enriched(spark: SparkSession, dir: String): DataFrame =
@@ -146,10 +109,7 @@ object Warehouse {
     * exchange once per-branch pruning differentiates the subtrees). In
     * production the parsed fact would be a staged table and `existing`
     * the warehouse's own (Year, Month) partitions. */
-  def upserted(spark: SparkSession, dir: String): DataFrame =
-    upsertedFrom(fact(spark, dir))
-
-  private[graft] def upsertedFrom(f: DataFrame): DataFrame = {
+  def upserted(spark: SparkSession, dir: String): DataFrame = {
     def variant(batch: Int, year: Column, amount: Column) =
       struct(col("gl_code"), col("category"), year.as("year"), col("month"),
         col("department"), amount.as("amount"), col("pos"), lit(batch).as("batch"))
@@ -160,7 +120,7 @@ object Warehouse {
       when(k % 5 === 0, variant(0, col("year"), col("amount") + 100.0))),
       v => v.isNotNull)
     UpsertDedupe.keepLastWithin(
-      f.select(explode(variants).as("v")).select(col("v.*")),
+      fact(spark, dir).select(explode(variants).as("v")).select(col("v.*")),
       Seq(col("gl_code"), col("year"), col("month"), col("department"), col("category")),
       Seq(col("batch").desc, col("pos").desc))
       .drop("pos", "batch")

@@ -39,9 +39,9 @@ object GraftColumnBridge {
     *
     * Plan-only tooling escape hatch: with JVM property
     * `graft.barrier.bypass=1` (read per call) the barrier is an
-    * identity, so explain/codegen tooling can construct barrier-staged
-    * queries lazily. Never set for Verify/Bench — they want the staged
-    * shape. */
+    * identity, so `graft.Dev plan` and `graft.Dev codegen` construct
+    * barrier-staged queries lazily (setting it only while they build).
+    * Never set for Verify/Bench — they want the staged shape. */
   def stageBarrier(df: Dataset[Row]): DataFrame = {
     if (sys.props.get("graft.barrier.bypass").contains("1")) df.toDF()
     else {

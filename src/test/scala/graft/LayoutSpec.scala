@@ -63,5 +63,8 @@ class LayoutSpec extends SparkSpec {
     assert(m.getString(0) == "zorder")
     assert((m.getLong(1), m.getDouble(2), m.getDouble(3)) == predicted,
       s"measured ${m.mkString(",")} != predicted $predicted")
+    // the sink under java.io.tmpdir is removed at JVM exit
+    assert(graft.sources.Staged.created.stream().anyMatch(_.contains("/graft_zorder_apply_")),
+      "the zorder sink is not registered for removal")
   }
 }

@@ -215,4 +215,13 @@ class ScaleSpec extends SparkSpec {
     assert(GraftSession.coresOf("local[*]") == Runtime.getRuntime.availableProcessors())
     assertThrows[IllegalArgumentException](GraftSession.coresOf("yarn"))
   }
+
+  test("the default core count is SPARK_GRAFT_CPUS, else min(32, nproc); a bad value is rejected") {
+    assert(GraftSession.defaultCpus(None) == math.min(32, Runtime.getRuntime.availableProcessors()))
+    assert(GraftSession.defaultCpus(Some("7")) == 7)
+    for (bad <- Seq("0", "-2", "x", "")) {
+      val e = intercept[IllegalArgumentException](GraftSession.defaultCpus(Some(bad)))
+      assert(e.getMessage == s"SPARK_GRAFT_CPUS must be a positive integer, got '$bad'")
+    }
+  }
 }
