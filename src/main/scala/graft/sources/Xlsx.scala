@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
 
 /** Real `.xlsx` ingestion with ZERO added dependencies: a workbook is a
   * zip of SpreadsheetML XML parts, and the JDK ships both the zip codec
-  * and the XML parsers — so the reference's actual monthly files
-  * (the python_version/sample_data workbooks, read by openpyxl at
-  * build_warehouse.py:112-125 / converted via Drive at Code.gs:111-116)
-  * load without POI.
+  * and the XML parsers — so workbooks laid out like the reference's
+  * monthly files (the python_version/sample_data workbooks, read by
+  * openpyxl at build_warehouse.py:112-125 / converted via Drive at
+  * Code.gs:111-116) load without POI. XlsxSpec tests it on committed
+  * fixtures of that layout in Excel's dialect (shared strings, styled and
+  * formula cells, absolute part targets; dev/xlsx_fixtures.py), not on
+  * the reference's own files.
   *
   * Scale shape: files arrive through Spark's `binaryFile` source, so N
   * workbooks parse on N tasks across the cluster — the same

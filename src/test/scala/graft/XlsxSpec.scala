@@ -4,14 +4,18 @@ import org.apache.spark.sql.functions._
 import graft.sources.Xlsx
 import graft.warehouse.Warehouse
 
-/** Drives the dependency-free xlsx reader against the reference's OWN
-  * sample workbooks (python_version/sample_data) — the files a real user
-  * of the reference holds. */
+/** Drives the dependency-free xlsx reader against committed fixture
+  * workbooks (src/test/resources/xlsx, written by dev/xlsx_fixtures.py)
+  * that reproduce the layout of the reference's sample workbooks
+  * (python_version/sample_data, same file names) in Excel's own dialect:
+  * shared strings, styled and formula cells, absolute part targets.
+  * The reference's own Excel-written bytes are not in this repository. */
 class XlsxSpec extends SparkSpec {
 
-  private val sample = "/root/reference/python_version/sample_data"
-  private val income = s"$sample/MM.YYYY Compant Depts Income Statement updated.xlsx"
-  private val warehouseWb = s"$sample/Example_Company Data Warehouse.xlsx"
+  private def fixture(name: String): String =
+    java.nio.file.Paths.get(getClass.getResource(s"/xlsx/$name").toURI).toString
+  private lazy val income = fixture("MM.YYYY Compant Depts Income Statement updated.xlsx")
+  private lazy val warehouseWb = fixture("Example_Company Data Warehouse.xlsx")
 
   test("cellsDf reads every department sheet of the real income workbook") {
     val sheets = Xlsx.cellsDf(spark, income)
