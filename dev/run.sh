@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main class fast (no sbt startup): dev/run.sh graft.Verify <args...>
-# The mains: graft.Verify, graft.Bench, graft.MakeScale, graft.DebugContainment
+# The mains: graft.Verify, graft.Bench, graft.MakeScale
 # and the dev loop graft.Dev <sfDir> <plan|codegen|final-plan|time> <query>...
 CLS="$1"; shift
 OPENS=""

@@ -1,26 +1,26 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Dev loop over registered queries (see `Usage`), in the session Bench
   * builds: `dev/run.sh graft.Dev <sfDir> <command> <query>...`.
-  * `plan` and `codegen` build the query with the stage barriers off
-  * (GraftColumnBridge.stageBarrier), so the plan reaches the scans;
-  * generating a broadcast join's code still runs its build side.
-  * `final-plan` builds it as registered. `time` is `Bench.time`, with
-  * SPARK_GRAFT_BENCH_PASSES passes. Per-layer times come from
-  * `perfbench/run.py --trace 1`. */
+  * `plan`, `codegen` and `final-plan` print the query's plan, then the
+  * plan of each stage barrier's input (GraftColumnBridge.stageBarrier)
+  * below it, so the output reaches the scans. `plan` and `codegen` run
+  * nothing, except that generating a broadcast join's code runs its
+  * build side. `time` is `Bench.time`, with SPARK_GRAFT_BENCH_PASSES
+  * passes. Per-layer times come from `perfbench/run.py --trace 1`. */
 object Dev {
   val Usage: String =
     """usage: graft.Dev <sfDir> <command> <query>...
-      |  plan        formatted physical plan, built without running the query
-      |  codegen     generated code of the static plan's codegen subtrees, built the same way
-      |  final-plan  run the query, then print its final adaptive plan
+      |  plan        formatted physical plans, per stage barrier, without running the query
+      |  codegen     generated code of the static plans' codegen subtrees, per stage barrier
+      |  final-plan  run the query, then print its final adaptive plans, per stage barrier
       |  time        Bench's warm-up and round-robin passes: min and median seconds per query""".stripMargin
 
   private val Commands = Set("plan", "codegen", "final-plan", "time")
-
-  private val Bypass = "graft.barrier.bypass"
 
   def main(args: Array[String]): Unit = {
     val (sfDir, _, _) = parse(args.toSeq)
@@ -34,26 +34,32 @@ object Dev {
     val (sfDir, command, names) = parse(args)
     command match {
       case "plan" => names.foreach { n =>
-        println(s"==== $n")
-        planOnly(spark, sfDir, n).explain("formatted")
+        stages(n, SparkEntry.queries(n)(spark, sfDir)).foreach { case (label, df) =>
+          println(label)
+          df.explain("formatted")
+        }
       }
       case "codegen" => names.foreach { n =>
         import org.apache.spark.sql.execution.debug._
-        println(s"==== $n")
         // AQE inserts codegen stages only as it runs them, so the code
-        // shown is the static plan's, planned here with AQE off
-        val df = planOnly(spark, sfDir, n)
+        // shown is the static plans', planned here with AQE off
+        val frames = stages(n, SparkEntry.queries(n)(spark, sfDir))
         val aqe = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try df.debugCodegen() finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        try frames.foreach { case (label, df) =>
+          println(label)
+          df.debugCodegen()
+        } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
       }
       case "final-plan" => names.foreach { n =>
         // run THIS QueryExecution: a noop write would plan a second one
         // and leave this plan un-executed
-        val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
-        qe.toRdd.foreachPartition(_ => ())
-        println(s"==== $n")
-        println(qe.executedPlan)
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        df.queryExecution.toRdd.foreachPartition(_ => ())
+        stages(n, df).foreach { case (label, d) =>
+          println(label)
+          println(d.queryExecution.executedPlan)
+        }
       }
       case "time" =>
         val t = Bench.time(spark, sfDir, names, Bench.passes)
@@ -76,16 +82,18 @@ object Dev {
     case _ => throw new IllegalArgumentException(Usage)
   }
 
-  /** `name`'s frame built with the stage barriers off. The property is
-    * JVM-wide, so it is set only while the frame is built and restored
-    * after. */
-  private def planOnly(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val prev = sys.props.get(Bypass)
-    sys.props(Bypass) = "1"
-    try SparkEntry.queries(name)(spark, sfDir)
-    finally prev match {
-      case Some(v) => sys.props(Bypass) = v
-      case None => sys.props.remove(Bypass): Unit
+  /** `df` under the header `==== name`, then the input of each stage
+    * barrier below it, at any depth, each once, under a header naming
+    * the barrier's RDD as the leaf's `Scan ExistingRDD` shows it. */
+  private[graft] def stages(name: String, df: DataFrame): Seq[(String, DataFrame)] = {
+    val seen = mutable.Set.empty[Int]
+    def from(label: String, d: DataFrame): Seq[(String, DataFrame)] = {
+      val inputs = for {
+        r <- d.queryExecution.analyzed.collectWithSubqueries { case r: LogicalRDD => r }
+        in <- GraftColumnBridge.barrierInput(r.rdd) if seen.add(r.rdd.id)
+      } yield (s"---- $name ${r.rdd}", in)
+      (label, d) +: inputs.flatMap { case (l, in) => from(l, in) }
     }
+    from(s"==== $name", df)
   }
 }

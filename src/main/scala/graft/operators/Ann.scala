@@ -274,7 +274,7 @@ object Ann {
     * seeds → strided sub-seeds → one integer-exact Lloyd step → celled
     * corpus. None when the corpus is degenerate (<2 coarse seeds) — the
     * callers fall back to brute force. Runs bounded driver jobs
-    * (O(√n·dim) collects) at construction, like factStaged. */
+    * (O(√n·dim) collects) at construction. */
   private def buildIvfIndex(e: DataFrame, n: Long): Option[IvfIndex] = {
     import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
     import graft.expressions.{NearestCell, NearestSubCell}

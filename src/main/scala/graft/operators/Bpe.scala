@@ -64,12 +64,8 @@ object Bpe {
       |       ELSE concat(acc, array(s)) END)""".stripMargin
 
   /** The trained chain: (merge table with `Rounds` rows, symbol-table
-    * states w_0..w_R — each staged once). `withFinal=false` skips
-    * constructing the last rewrite when only the merge table is
-    * consumed (each stage barrier materializes eagerly — don't build
-    * frames nobody reads; the states seq then ends at w_{R-1}). */
-  private def chain(spark: SparkSession, dir: String,
-                    withFinal: Boolean): (DataFrame, Seq[DataFrame]) = {
+    * states w_0..w_R — each staged once). */
+  private def chain(spark: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val wf = words(Tables.documents(spark, dir))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
     var w = stageBarrier(wf.select(col("word"), col("freq"),
@@ -87,11 +83,9 @@ object Bpe {
       val best = stageBarrier(
         pairs.orderBy(col("cnt").desc, col("a"), col("b")).limit(1))
       bests += best.select(lit(r).as("rnd"), col("a"), col("b"), col("cnt"))
-      if (r < Rounds || withFinal) {
-        w = stageBarrier(w.crossJoin(broadcast(best))
-          .select(col("word"), col("freq"), expr(mergeFold).as("syms")))
-        states += w
-      }
+      w = stageBarrier(w.crossJoin(broadcast(best))
+        .select(col("word"), col("freq"), expr(mergeFold).as("syms")))
+      states += w
     }
     (bests.result().reduce(_ union _).orderBy(col("rnd")), states.result())
   }
@@ -101,7 +95,7 @@ object Bpe {
     * frequency-weighted count at pick time — the tokenizer artifact a
     * training pipeline ships next to the packed shards. */
   def textBpeTrain(spark: SparkSession, dir: String): DataFrame =
-    chain(spark, dir, withFinal = false)._1
+    chain(spark, dir)._1
 
   /** Shared mirror chain wf → w0 → (p_r, b_r, w_r)* — both oracles
     * compose from this one constant (the ngramDupsCtes drift rule).
@@ -159,7 +153,7 @@ b$r AS (SELECT a, b, cnt FROM p$r ORDER BY cnt DESC, a, b LIMIT 1)""" + wNext
     * final symbol table (vocab-bounded, AQE picks the side), then a
     * ≤|langs|-row rollup. */
   def textBpeFertility(spark: SparkSession, dir: String): DataFrame = {
-    val (_, states) = chain(spark, dir, withFinal = true)
+    val (_, states) = chain(spark, dir)
     val w8 = states.last
     val lf = words(Tables.documents(spark, dir), col("lang"))
       .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("freq"))
@@ -217,7 +211,7 @@ FROM ag ORDER BY lang"""
     * (doc, word), never per occurrence. Docs with no whitespace words
     * have no tokenization and are absent, both engines. */
   def textBpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val (_, states) = chain(spark, dir, withFinal = true)
+    val (_, states) = chain(spark, dir)
     val w8 = states.last
     val dw = words(Tables.documents(spark, dir), col("doc_id"))
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("freq"))
@@ -267,7 +261,7 @@ FROM ag ORDER BY doc_id"""
     * top of the already-staged chain states — the curve costs `Rounds`
     * extra vocab scans, nothing corpus-scale beyond the shared chain. */
   def textBpeCurve(spark: SparkSession, dir: String): DataFrame = {
-    val (merges, states) = chain(spark, dir, withFinal = true)
+    val (merges, states) = chain(spark, dir)
     val toks = states.zipWithIndex.map { case (w, r) =>
       w.agg(sum(col("freq") * size(col("syms"))).as("n_tokens"),
           sum(col("freq") * length(col("word"))).as("n_chars"))

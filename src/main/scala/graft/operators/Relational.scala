@@ -1201,8 +1201,8 @@ object Relational {
     * re-aliased exchanges never compare sameResult (verified on the
     * executed adaptive plan: two distinct ShuffleQueryStage ids for the
     * same aggregate). So the aggregate is staged ONCE behind a stage
-    * barrier; the ~0.1 s fixed eager-materialization cost loses to the
-    * duplicated pass only below ~sf1 toy sizes, and at 100 TB the
+    * barrier; the ~0.1 s fixed cost of running it as its own job loses
+    * to the duplicated pass only below ~sf1 toy sizes, and at 100 TB the
     * barrier halves the lineitem derivation. RelationalSpec pins the
     * staged shape (zero revenue shuffles in the query's own plan). The
     * equality compare is exact DECIMAL micro-units so a tie cannot

@@ -77,12 +77,9 @@ object Warehouse {
     * past Janino's 64 KB limit → silent interpreted fallback on the
     * hottest stage (CodegenGateSpec gates the whole registry).
     *
-    * Construction-time cost (deliberate): factDerived's subtree holds the
-    * ffill window shuffle and the marker-frame exchanges, so under AQE the
-    * barrier materializes those stages EAGERLY when this DataFrame is
-    * built (see the stageBarrier scaladoc). That is the right trade here —
-    * registry queries are constructed once, immediately before running —
-    * but it means factStaged is not for plan-only tooling. */
+    * Building this frame runs nothing: factDerived's ffill window
+    * shuffle and marker-frame exchanges run when a job first reads the
+    * barrier, once per built frame (see the stageBarrier scaladoc). */
   def factStaged(spark: SparkSession, dir: String, cols: String*): DataFrame = {
     val need = (cols ++ Seq("gl_code", "amount")).distinct
     stageBarrier(factDerived(Statements.income(spark, dir)).select(need.map(col): _*))

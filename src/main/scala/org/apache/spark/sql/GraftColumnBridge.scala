@@ -1,12 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.spark.{OneToOneDependency, Partition, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into the `private[sql]` Column↔Expression converters — the
-  * standard shim for extension libraries that construct native Catalyst
-  * expressions as Columns without registering a SQL function (Spark 4
-  * removed the public Column(Expression) constructor). Kept to exactly
-  * these two forwarders. */
+/** Bridge into `private[sql]` Spark internals for extension code: the
+  * Column↔Expression converters (Spark 4 removed the public
+  * Column(Expression) constructor, so native Catalyst expressions are
+  * wrapped through these) and the stage barrier with its accessor. */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -25,28 +27,32 @@ object GraftColumnBridge {
     * supported-shape fix (CodegenGateSpec keeps the whole registry
     * fallback-free).
     *
-    * Caveat — construction is NOT free: the child plan is compiled at
-    * construction time, and when the subtree contains exchanges (window
-    * shuffles, distinct, the marker crossJoins in graft's statements
-    * derivation) AQE's `doExecute` materializes those shuffle stages
-    * EAGERLY — merely constructing (or explaining) a barrier-wrapped
-    * DataFrame runs Spark jobs, and AQE cannot re-optimize across the
-    * barrier. Callers like Warehouse.factStaged rely on this consciously:
-    * registry queries are constructed immediately before execution, so
-    * the eager stages are work that runs exactly once either way. Do NOT
-    * construct barrier-wrapped frames in plan-only tooling loops, and
-    * don't construct the same one twice (the stages re-run).
-    *
-    * Plan-only tooling escape hatch: with JVM property
-    * `graft.barrier.bypass=1` (read per call) the barrier is an
-    * identity, so `graft.Dev plan` and `graft.Dev codegen` construct
-    * barrier-staged queries lazily (setting it only while they build).
-    * Never set for Verify/Bench — they want the staged shape. */
+    * Building and explaining the barrier runs nothing: `df` is planned,
+    * and the shuffle stages inside it run, when a job first asks the
+    * leaf's RDD for its partitions — once, however many plans or actions
+    * read the leaf. AQE cannot re-optimize across the barrier;
+    * `barrierInput` gives the frame behind a leaf, so tools can show the
+    * plan below it. */
   def stageBarrier(df: Dataset[Row]): DataFrame = {
-    if (sys.props.get("graft.barrier.bypass").contains("1")) df.toDF()
-    else {
-      val cdf = df.asInstanceOf[classic.Dataset[Row]]
-      cdf.sparkSession.internalCreateDataFrame(cdf.queryExecution.toRdd, cdf.schema)
-    }
+    val cdf = df.asInstanceOf[classic.Dataset[Row]]
+    cdf.sparkSession.internalCreateDataFrame(new StageBarrierRDD(cdf), cdf.schema)
+  }
+
+  /** The frame a stage barrier rebased, when `rdd` is a barrier leaf's
+    * (`LogicalRDD.rdd`, `RDDScanExec.rdd`). */
+  def barrierInput(rdd: RDD[_]): Option[DataFrame] = rdd match {
+    case b: StageBarrierRDD => Some(b.input)
+    case _ => None
+  }
+
+  /** `input`'s rows, planned and run on first use: `inner` is built when
+    * Spark first asks for partitions or dependencies, on the driver. */
+  private class StageBarrierRDD(@transient val input: classic.Dataset[Row])
+      extends RDD[InternalRow](input.sparkSession.sparkContext, Nil) {
+    @transient private lazy val inner = input.queryExecution.toRdd
+    override protected def getDependencies = Seq(new OneToOneDependency(inner))
+    override protected def getPartitions: Array[Partition] = inner.partitions
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      firstParent[InternalRow].iterator(split, context)
   }
 }

@@ -435,17 +435,14 @@ class AnalyticsSpec extends SparkSpec {
     // Plan pin for the 100x property: every row_number over the
     // customer-scaled frame must be partitioned by a bkt_* column; the
     // only unpartitioned windows left are over the B-row histograms.
-    // Barrier bypass exposes the sub-plans that stageBarrier would hide
-    // behind LogicalRDD leaves.
-    System.setProperty("graft.barrier.bypass", "1")
-    try {
-      for (q <- Seq("orders_rfm", "orders_pareto")) {
-        val plan = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan.toString
-        val rnLines = plan.split("\n").filter(_.contains("row_number()"))
-        assert(rnLines.nonEmpty && rnLines.forall(_.contains("bkt_")), s"$q:\n$plan")
-        assert(!plan.contains("ntile("), s"$q still plans a global ntile:\n$plan")
-      }
-    } finally System.clearProperty("graft.barrier.bypass")
+    // The plans checked are the query's and each stage barrier's input.
+    for (q <- Seq("orders_rfm", "orders_pareto")) {
+      val plan = Dev.stages(q, SparkEntry.queries(q)(spark, sf))
+        .map(_._2.queryExecution.optimizedPlan.toString).mkString("\n")
+      val rnLines = plan.split("\n").filter(_.contains("row_number()"))
+      assert(rnLines.nonEmpty && rnLines.forall(_.contains("bkt_")), s"$q:\n$plan")
+      assert(!plan.contains("ntile("), s"$q still plans a global ntile:\n$plan")
+    }
   }
 
   test("orders_pareto: 10 deciles, shares sum to 1, cum_share monotone to 1") {

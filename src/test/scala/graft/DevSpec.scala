@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** `graft.Dev` through its `run` entry point, on the shared session. */
 class DevSpec extends SparkSpec {
 
@@ -13,32 +9,11 @@ class DevSpec extends SparkSpec {
     out.toString("UTF-8")
   }
 
-  /** Jobs started while `f` runs, leaving out the job Spark runs to
-    * read a parquet file's schema whenever a frame reads one. */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (!e.stageInfos.exists(_.details.contains("DataFrameReader.parquet")))
-          jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = f
-      ListenerBusAccess.drain(spark.sparkContext)
-      (a, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
-  test("plan builds a barrier-staged query without running it, reaches its parquet scans, and unsets the bypass") {
-    // built as registered, q15's stage barrier runs jobs
-    val (_, registeredJobs) = jobsDuring(SparkEntry.queries("q15_top_supplier")(spark, sf))
-    assert(registeredJobs > 0)
+  test("plan prints each barrier's input plan down to the parquet scans and runs nothing") {
     val (plan, planJobs) = jobsDuring(output("plan", "q15_top_supplier"))
     assert(planJobs == 0)
+    assert(plan.contains("---- q15_top_supplier StageBarrierRDD["), plan)
     assert(plan.contains("Scan parquet"), plan)
-    assert(!plan.contains("ExistingRDD"), plan)
-    assert(!sys.props.contains("graft.barrier.bypass"))
   }
 
   test("codegen prints the static plan's generated code and leaves AQE on") {

@@ -98,12 +98,14 @@ class PlanInvariantsSpec extends SparkSpec {
   /** r15 invariant (VERDICT r14 "What's wrong" #4 / task #6): the r8 test
     * above treats a stageBarrier RDD leaf as bounded, so an edit could
     * quietly park a GLOBAL window on top of a barrier-staged data-scaled
-    * frame and pass. With the barrier bypass property set, barriers are
-    * identities and the same structural rule applies THROUGH them: every
-    * empty-partition WindowExec must have an aggregate/limit between it
-    * and ANY parquet scan — no allowlist, every one of the current
-    * single-partition window sites proves itself bounded. */
+    * frame and pass. Here a barrier leaf is bounded only if its input's
+    * plan is, so the same structural rule applies THROUGH barriers: every
+    * empty-partition WindowExec, in the query's plan or in any barrier
+    * input's, must have an aggregate/limit between it and ANY parquet
+    * scan — no allowlist, every one of the current single-partition
+    * window sites proves itself bounded. */
   test("empty-partition windows stay bounded even through stage barriers") {
+    import org.apache.spark.sql.GraftColumnBridge
     import org.apache.spark.sql.execution._
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -112,6 +114,8 @@ class PlanInvariantsSpec extends SparkSpec {
       case _: GlobalLimitExec | _: LocalLimitExec | _: CollectLimitExec |
            _: TakeOrderedAndProjectExec => true
       case _: FileSourceScanExec => false
+      case r: RDDScanExec =>
+        GraftColumnBridge.barrierInput(r.rdd).forall(in => bounded(in.queryExecution.sparkPlan))
       case other => other.children.forall(bounded)
     }
     def scan(p: SparkPlan): Seq[String] = {
@@ -126,19 +130,13 @@ class PlanInvariantsSpec extends SparkSpec {
       })).collect { case sp: SparkPlan => sp }
       here ++ subs.flatMap(scan)
     }
-    val prev = sys.props.get("graft.barrier.bypass")
-    sys.props("graft.barrier.bypass") = "1"
-    try {
-      val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-        val plan = SparkEntry.queries(name)(spark, sf).queryExecution.sparkPlan
-        if (scan(plan).nonEmpty) Some(name) else None
-      }
-      assert(offenders.isEmpty,
-        s"single-reducer global windows (through barriers) in: ${offenders.mkString(", ")}")
-    } finally prev match {
-      case Some(v) => sys.props("graft.barrier.bypass") = v
-      case None => sys.props.remove("graft.barrier.bypass"): Unit
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      val plans = Dev.stages(name, SparkEntry.queries(name)(spark, sf))
+        .map(_._2.queryExecution.sparkPlan)
+      if (plans.exists(scan(_).nonEmpty)) Some(name) else None
     }
+    assert(offenders.isEmpty,
+      s"single-reducer global windows (through barriers) in: ${offenders.mkString(", ")}")
   }
 
   /** r7 invariant (VERDICT r6 "What's wrong" #1): a static broadcast() hint

@@ -311,23 +311,39 @@ class RelationalSpec extends SparkSpec {
       s"lineitem scanned inside the query plan — barrier not in effect:\n$inner")
   }
 
-  test("barrier bypass keeps plan-only tooling lazy and result-identical") {
-    // with graft.barrier.bypass=1 the stageBarrier is an identity: the
-    // query plan keeps the raw lineage (lineitem scan visible — nothing
-    // pre-executed at construction), and the rows still match the
-    // staged shape bit-for-bit
-    sys.props("graft.barrier.bypass") = "1"
-    val (bypassPlan, bypassRows) = try {
-      val df = run("q15_top_supplier")
-      (df.queryExecution.analyzed.toString, df.collect().toSeq)
-    } finally sys.props.remove("graft.barrier.bypass")
-    assert(!bypassPlan.contains("LogicalRDD"),
-      s"bypassed barrier should keep the raw lineage (no LogicalRDD leaf):\n$bypassPlan")
-    val staged = run("q15_top_supplier")
-    val stagedPlan = staged.queryExecution.analyzed.toString
-    assert(stagedPlan.contains("LogicalRDD"),
-      s"staged barrier should rebase onto a LogicalRDD leaf:\n$stagedPlan")
-    assert(staged.collect().toSeq == bypassRows)
+  test("stage barrier: building q15 starts no query job and keeps its LogicalRDD leaf") {
+    // the revenue barrier is a LogicalRDD leaf: the query's own plan
+    // does not read lineitem, the barrier's input does, and none of it
+    // runs until an action reads the leaf
+    import org.apache.spark.sql.GraftColumnBridge.barrierInput
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    def readsLineitem(p: LogicalPlan): Boolean = p.collect {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location.rootPaths
+    }.flatten.exists(_.toString.contains("lineitem"))
+    val (staged, jobs) = jobsDuring(run("q15_top_supplier"))
+    assert(jobs == 0)
+    val plan = staged.queryExecution.analyzed
+    val inputs = plan.collect { case r: LogicalRDD => r.rdd }.flatMap(barrierInput(_))
+    assert(inputs.nonEmpty, s"staged barrier should rebase onto a LogicalRDD leaf:\n$plan")
+    assert(!readsLineitem(plan), plan)
+    assert(inputs.exists(in => readsLineitem(in.queryExecution.analyzed)))
+  }
+
+  test("stage barrier: two actions run its input's shuffle-map stages once, same rows") {
+    import org.apache.spark.sql.GraftColumnBridge.stageBarrier
+    import org.apache.spark.sql.functions._
+    val revenue = graft.sources.Tables.lineitem(spark, sf)
+      .groupBy(col("l_suppkey")).agg(sum(col("l_extendedprice")).as("rev"))
+    val (staged, built) = mapStagesDuring(stageBarrier(revenue))
+    assert(built == 0)
+    val (n, first) = mapStagesDuring(staged.count())
+    assert(first >= 1)
+    val (rows, second) = mapStagesDuring(staged.collect())
+    assert(second == 0, "the second action re-ran the barrier's input")
+    assert(rows.length == n)
+    assert(rows.sortBy(_.getLong(0)).toSeq == revenue.collect().sortBy(_.getLong(0)).toSeq)
   }
 
   test("q21: grouped cascades inherit the join partitioning under sort-merge") {
