@@ -1,56 +1,25 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line on stdout.
+/** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR.
   *
-  * Methodology:
-  *  - one warmup pass (q1_agg + a window query + a join) absorbs JVM/
-  *    codegen/parquet-footer warmup so the first timed query isn't charged
-  *    ~50 s of fixed cost;
-  *  - timing materializes the FULL result via a noop-format write (sorts
-  *    and projections execute; `.count()` would let Catalyst elide them);
-  *  - each query is sampled once per ROUND-ROBIN pass (3 passes by
-  *    default, SPARK_GRAFT_BENCH_PASSES to override) and reports its
-  *    MIN across passes. The passes space a query's samples across the
-  *    whole bench duration; min is the right plan-cost estimator under
-  *    co-tenant contention, because contention only ever ADDS time — the
-  *    r3/r4 driver runs each had 2 of 3 passes contended (pass_totals
-  *    645/197/762 s and 1672/175/781 s), which a 3-sample median cannot
-  *    reject but a min shrugs off as long as ONE pass ran quiet. Medians
-  *    are still emitted as `queries_median` for variance visibility;
-  *  - `value` is the sum of per-query minima; per-pass sums are
-  *    reported in `pass_totals` so run-to-run variance is visible;
-  *  - a failing query reports in `errors` instead of being silently
-  *    timed as if it succeeded, and is skipped in later passes.
+  * Method: a warm-up (q1_agg, topk_window, q3_join_agg), then
+  * SPARK_GRAFT_BENCH_PASSES (3) round-robin passes over the registry, each
+  * opened by a fixed in-memory calibration probe (`calib_s`, a box-speed
+  * reading independent of the data). A query is timed by materializing
+  * its full result through a noop write and reports its MIN over passes:
+  * co-tenant contention only ever adds time. A failed query is listed
+  * under `errors` and skipped in later passes (see [[FailurePolicy]]).
   *
-  * Output shape (two lines, r7): the driver captures only a bounded TAIL of
-  * stdout. r5 put everything on one full-precision line → front-clipped past
-  * the `"metric"` key (`parsed: null`). r6 split diagnostics onto a `#diag `
-  * line but STILL inlined the full per-query min map in the headline — at 97
-  * queries that is ~2.4 KB, and the bounded capture front-clipped the
-  * `{"metric":"total",...}` prefix again (`parsed: null`, second round
-  * running). r7 therefore makes the FINAL line aggregate-only (~250 bytes:
-  * metric/value/n_queries/errors/sf — nothing that grows with the registry
-  * except `errors`, which is empty on a healthy run) and moves BOTH per-query
-  * maps (mins and medians) to the `#diag` line, which is safe to tail-clip.
-  *
-  * Contention vs regression (r8): the r7 judge wanted the medians map in the
-  * parsed headline, but a 131-entry map is ~3.7 KB — re-inlining it would
-  * front-clip the headline exactly like r5/r6 (the capture observed in
-  * BENCH_r07.tail is ~4 KB total). The headline instead carries the
-  * registry-size-INDEPENDENT contention fingerprint: `value_median` (sum of
-  * per-query medians — under contention it inflates while `value`, the sum
-  * of minima, holds) and `pass_totals` (a spread across passes = co-tenant
-  * noise, a uniform shift = real cost). Both per-query maps still ride the
-  * `#diag` line; since r15 the MINS map is placed LAST inside its JSON so
-  * the driver's bounded tail capture preserves (a suffix of) the map the
-  * per-query comparator actually pairs — r14's PERF came back with
-  * per_query empty because the mins map was the front-clipped one — and
-  * the complete result (headline + both maps) is additionally written to
-  * BENCH_PERQUERY.json (override with SPARK_GRAFT_BENCH_JSON) so a full
-  * per-query record exists regardless of tail-capture limits.
+  * Output: two stdout lines. First `#diag {...}` with the per-pass
+  * totals and both per-query maps (medians, then mins); last the
+  * headline, a JSON object of aggregates only (`value` = sum of the
+  * minima, `value_median`, `pass_totals`, `n_queries`, `errors`,
+  * `calib_s`), so a bounded tail capture of stdout keeps it whole. The
+  * full result, headline and both maps, is also written to
+  * BENCH_PERQUERY.json (SPARK_GRAFT_BENCH_JSON overrides the path).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -89,9 +58,10 @@ object Bench {
 
     // Warmup: representative codepaths (scan+agg, window, join).
     for (w <- Seq("q1_agg", "topk_window", "q3_join_agg"))
-      try materialize(w) catch { case _: Throwable => () }
+      FailurePolicy(materialize(w))(reason =>
+        System.err.println(s"[bench] warm-up $w failed: $reason"))
 
-    // Fixed calibration workload (r12): one synthetic in-memory
+    // Fixed calibration workload: one synthetic in-memory
     // scan+window+join+agg, independent of SF and registry, timed at the
     // START of each pass. Its reading is a pure box-speed probe — when a
     // round's totals drift vs BASELINE, compare calib_s first: a shifted
@@ -112,12 +82,8 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    // Calibration failures must be diagnosable, not silent: only NonFatal
-    // is absorbed (an OOM/fatal JVM error should kill the bench rather
-    // than publish totals from a dying executor), and the first failure
-    // reason lands in the headline as calib_error next to the -1 reading.
-    // (Guard factored out as Bench.CalibGuard so the spec can pin both
-    // behaviors — the r13 fix was live but untested.)
+    // A failed probe reads -1 and its first reason lands in the headline
+    // as calib_error.
     val calibGuard = new CalibGuard
     def tryCalibrate(): Double = calibGuard.run(() => calibrate())
     def calibError: Option[String] = calibGuard.firstError
@@ -132,13 +98,14 @@ object Bench {
       names.foreach { name =>
         if (!errors.contains(name)) {
           val t0 = System.nanoTime()
-          try {
+          FailurePolicy {
             materialize(name)
             val dt = (System.nanoTime() - t0) / 1e9
             samples(name) = dt :: samples.getOrElse(name, Nil)
             passSum += dt
-          } catch { case e: Throwable =>
-            errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+          } { reason =>
+            System.err.println(s"[bench] $name failed: $reason")
+            errors += name -> reason
             samples -= name
           }
         }
@@ -158,16 +125,12 @@ object Bench {
 
   /** Prints the `#diag` line and the headline, then writes the sidecar. */
   private def report(sfDir: String, t: Timings): Unit = {
+    import FailurePolicy.jsonString
     val Timings(mins, meds, errors, passTotals, calibs, calibError) = t
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     def ms(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def jmap(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => s"${jstr(k)}:${ms(v)}" }.mkString("{", ",", "}")
-    val es = errors.toSeq.sorted.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+      kvs.map { case (k, v) => s"${jsonString(k)}:${ms(v)}" }.mkString("{", ",", "}")
+    val es = errors.toSeq.sorted.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }
       .mkString("{", ",", "}")
     val total = mins.map(_._2).sum
     val pts = passTotals.map(ms).mkString("[", ",", "]")
@@ -179,19 +142,10 @@ object Bench {
     val calibOk = calibs.filter(_ >= 0)
     val calibS = if (calibOk.nonEmpty) ms(calibOk.min) else "null"
     val calibArr = calibs.map(ms).mkString("[", ",", "]")
-    // r15 (VERDICT r14 "What's wrong" #5): the driver stores only a
-    // bounded TAIL of stdout, so whichever map sits LAST inside the diag
-    // object is the one the tail-clip preserves. r8 placed medians last;
-    // r14's per-query comparator went dark because the MINS map (the
-    // metric `value` sums, the one a comparator pairs) was front-clipped.
-    // Mins now ride last. The verdict's literal suggestion — print the
-    // map AFTER the total line — would push the headline out of the
-    // bounded tail and re-create the r5/r6 parsed:null failure, so the
-    // headline stays last; instead the FULL two-map result is also
-    // written to BENCH_PERQUERY.json in the working directory (adds-only:
-    // stdout still carries the same one-line headline contract).
+    // Mins ride last inside the diag object: a tail-clipped capture keeps
+    // (a suffix of) the map per-query comparisons pair.
     println(s"""#diag {"pass_totals":$pts,"passes":$passes,"calib_passes":$calibArr,"queries_median":${jmap(meds)},"queries":${jmap(mins)}}""")
-    val calibErr = calibError.map(e => s""","calib_error":${jstr(e)}""").getOrElse("")
+    val calibErr = calibError.map(e => s""","calib_error":${jsonString(e)}""").getOrElse("")
     val headline = s"""{"metric":"total","value":${ms(total)},"value_median":${ms(totalMed)},"pass_totals":$pts,"unit":"sec","n_queries":${mins.size},"errors":$es,"passes":$passes,"calib_s":$calibS$calibErr,"calib_passes":$calibArr,"sf":"$sfDir"}"""
     println(headline)
     try {
@@ -199,22 +153,52 @@ object Bench {
       val full = s"""{"headline":$headline,"queries":${jmap(mins)},"queries_median":${jmap(meds)}}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
         (full + "\n").getBytes("UTF-8")): Unit
-    } catch { case scala.util.control.NonFatal(_) => () } // sidecar is best-effort
+    } catch { case NonFatal(_) => () } // sidecar is best-effort
   }
 }
 
-/** The bench calibration failure guard: NonFatal → -1.0 reading with
-  * the FIRST failure reason kept for the headline's `calib_error`
-  * (later failures don't overwrite the root cause); fatal JVM errors
-  * propagate — a bench on a dying executor must die, not publish.
-  * Factored from Bench.main so the spec can pin both behaviors. */
+/** How Bench, Verify and CodegenGateSpec treat a failure: one policy.
+  *
+  * `FailurePolicy(f)(recover)` returns `f`'s value. A NonFatal error is
+  * handed to `recover` as "<class>: <message>", whose value stands in
+  * for `f`'s: the failure is recorded and the run goes on. A
+  * VirtualMachineError (out of memory, stack overflow, internal error)
+  * is handed to `recover` the same way and then rethrown: the record is
+  * written, and the run ends instead of carrying on in a damaged JVM.
+  * Any other throwable (an interrupt, a linkage error) passes through
+  * unrecorded. A throw inside a thread pool's task does not stop the
+  * pool, so a pool's owner has to end the run itself (see Verify). */
+private[graft] object FailurePolicy {
+  def apply[A](f: => A)(recover: String => A): A =
+    try f catch {
+      case NonFatal(e) => recover(describe(e))
+      case e: VirtualMachineError => recover(describe(e)); throw e
+    }
+
+  def describe(e: Throwable): String =
+    (e.getClass.getName + Option(e.getMessage).fold("")(": " + _)).take(300)
+
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character escaped (a raw tab in a record breaks `json.load`). */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+}
+
+/** Bench's calibration probe under [[FailurePolicy]]: a failure reads
+  * -1.0, and the FIRST reason is kept for the headline's `calib_error`
+  * (later failures don't overwrite the root cause). */
 private[graft] final class CalibGuard {
   @volatile private[graft] var firstError: Option[String] = None
   def run(f: () => Double): Double =
-    try f() catch {
-      case scala.util.control.NonFatal(e) =>
-        if (firstError.isEmpty)
-          firstError = Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-        -1.0
+    FailurePolicy(f()) { reason =>
+      if (firstError.isEmpty) firstError = Some(reason)
+      -1.0
     }
 }

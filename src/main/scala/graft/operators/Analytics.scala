@@ -87,52 +87,30 @@ object Analytics {
     * the merge logic is identical. Exactness means the DuckDB oracle is
     * the SAME SQL as rank_stats: bucketing must not change one bit. */
   def rankStatsScalable(spark: SparkSession, dir: String): DataFrame = {
-    val B = 64
     val o = Tables.orders(spark, dir)
       .select(col("o_orderstatus"), col("o_orderkey"), col("o_totalprice"))
     val rng = o.agg(min(col("o_totalprice")).as("mn"), max(col("o_totalprice")).as("mx"))
     val bucketed = o.crossJoin(broadcast(rng))
-      .withColumn("bkt",
-        coalesce(greatest(lit(0L), least(lit(B - 1L),
-          floor((col("o_totalprice") - col("mn")) * B / (col("mx") - col("mn") + lit(1e-6))))),
-          lit(0L)))
+      .withColumn("bkt", ExactRank.eqWidthBucket(col("o_totalprice"), col("mn"), col("mx")))
       .drop("mn", "mx")
-    rankFromBuckets(bucketed)
+    rankStatsFrom(bucketed)
   }
 
-  /** The shared two-pass exact-rank cascade over any price-monotone
-    * `bkt` column: histogram → per-bucket global offsets (tiny windows
-    * over 3·B rows) → within-(status, bucket) row_number + offset.
-    * Any bucketing that is a non-decreasing function of the order key's
-    * leading column yields bit-identical ranks — which is why both
-    * bucketing strategies share rank_stats' oracle SQL verbatim. */
-  private def rankFromBuckets(bucketed: DataFrame): DataFrame = {
-    val hist = bucketed.groupBy(col("o_orderstatus"), col("bkt")).agg(count(lit(1)).as("c"))
-    val wOff = Window.partitionBy(col("o_orderstatus")).orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = hist
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(col("o_orderstatus"))))
-      .select(col("o_orderstatus"), col("bkt"), col("off"), col("n"))
-    val wLoc = Window.partitionBy(col("o_orderstatus"), col("bkt"))
-      .orderBy(col("o_totalprice"), col("o_orderkey"))
-    bucketed
-      .withColumn("rn", row_number().over(wLoc))
-      .join(broadcast(offs), Seq("o_orderstatus", "bkt"))
-      .withColumn("rk", col("off") + col("rn"))
-      // ntile(4): n = q*4 + r; first r buckets hold q+1 rows (Spark's NTile).
-      .withColumn("quartile", expr(
-        """CAST(CASE WHEN rk <= (n % 4) * (n DIV 4 + 1)
-          |          THEN (rk - 1) DIV (n DIV 4 + 1) + 1
-          |          ELSE (n % 4) + (rk - 1 - (n % 4) * (n DIV 4 + 1)) DIV (n DIV 4) + 1
-          |     END AS INT)""".stripMargin))
+  /** rank_stats' columns from any price-monotone `bkt` column through
+    * ExactRank's (status, bkt) cascade: any bucketing that is a
+    * non-decreasing function of the order key's leading column yields
+    * bit-identical ranks — which is why both bucketing strategies share
+    * rank_stats' oracle SQL verbatim. */
+  private def rankStatsFrom(bucketed: DataFrame): DataFrame =
+    ExactRank.rank(bucketed, Seq("o_orderstatus"), "bkt",
+        Seq(col("o_totalprice"), col("o_orderkey")))
+      .withColumn("quartile", ExactRank.ntile(4))
       .withColumn("cume", col("rk").cast("double") / col("n").cast("double"))
       .withColumn("prank", when(col("n") === 1, 0.0)
         .otherwise((col("rk") - 1).cast("double") / (col("n") - 1).cast("double")))
       .select(col("o_orderstatus"), col("o_orderkey"), col("o_totalprice"),
         col("quartile"), col("cume"), col("prank"))
       .orderBy(col("o_orderstatus"), col("o_orderkey"))
-  }
 
   // ---------------------------------------------- rank_stats_eqdepth
   /** rank_stats_scalable's own Scaladoc names the skew fix — equi-DEPTH
@@ -163,7 +141,7 @@ object Analytics {
       .withColumn("bkt",
         size(filter(col("bnds"), b => b < col("o_totalprice"))).cast("long"))
       .drop("bnds")
-    rankFromBuckets(bucketed)
+    rankStatsFrom(bucketed)
   }
 
   // ---------------------------------------------------------- events_funnel
@@ -417,8 +395,8 @@ object Analytics {
     * triples x 12), the actuals aggregate is map-side combined, and the
     * join is broadcast-able. */
   def finSparseFill(spark: SparkSession, dir: String): DataFrame = {
-    // factStaged: both aggregates below group directly over the statements
-    // derivation — see Warehouse.factStaged (64 KB codegen guard).
+    // factStaged: the actuals and the dimension frame both read the
+    // statements derivation; staged, it runs once for the two of them.
     val f = graft.warehouse.Warehouse.factStaged(
       spark, dir, "department", "gl_code", "year", "month", "amount")
     val actual = f.groupBy(col("department"), col("gl_code"), col("year"), col("month"))
@@ -1236,45 +1214,6 @@ object Analytics {
       |FROM dau JOIN m USING (day_us)
       |ORDER BY day_us""".stripMargin
 
-  // ------------------------------------------------- exact distributed ntile
-  /** Equi-width bucket index (0..B-1) of `v` within [mn, mx] — a
-    * NON-DECREASING function of v, so bucketing preserves any total
-    * order whose leading key is v (the rank_stats_scalable invariant). */
-  private val NTILE_B = 64
-  private def eqWidthBkt(v: Column, mn: Column, mx: Column): Column =
-    coalesce(greatest(lit(0L), least(lit(NTILE_B - 1L),
-      floor((v - mn) * NTILE_B / (mx - mn + lit(1e-6))))), lit(0L))
-
-  /** Exact `ntile(k) OVER (ORDER BY <order>)` WITHOUT a global
-    * single-reducer window — the rank_stats_scalable cascade applied to
-    * an unpartitioned total order: `df` carries a bucket column `bcol`
-    * that is non-decreasing along `order`; histogram → per-bucket global
-    * offsets (tiny windows over the B-row histogram, which sits ABOVE an
-    * aggregate — never over the data-scaled frame) → within-bucket
-    * row_number + offset = exact global rank → Spark's closed-form NTile
-    * (first n%k tiles carry n/k+1 rows). Bit-identical to the global
-    * ntile wherever the bucket boundaries land, because equal order-keys
-    * share a bucket and offsets restore the global numbering. */
-  private def exactNtile(df: DataFrame, bcol: String, order: Seq[Column],
-                         k: Int, out: String): DataFrame = {
-    val hist = df.groupBy(col(bcol)).agg(count(lit(1)).as("c_"))
-    val wOff = Window.orderBy(col(bcol)).rowsBetween(Window.unboundedPreceding, -1)
-    val offs = hist
-      .withColumn("off_", coalesce(sum(col("c_")).over(wOff), lit(0L)))
-      .withColumn("n_", sum(col("c_")).over(Window.partitionBy()))
-      .select(col(bcol), col("off_"), col("n_"))
-    val wLoc = Window.partitionBy(col(bcol)).orderBy(order: _*)
-    df.withColumn("rn_", row_number().over(wLoc))
-      .join(broadcast(offs), Seq(bcol))
-      .withColumn("rk_", col("off_") + col("rn_"))
-      .withColumn(out, expr(
-        s"""CAST(CASE WHEN rk_ <= (n_ % $k) * (n_ DIV $k + 1)
-           |          THEN (rk_ - 1) DIV (n_ DIV $k + 1) + 1
-           |          ELSE (n_ % $k) + (rk_ - 1 - (n_ % $k) * (n_ DIV $k + 1)) DIV (n_ DIV $k) + 1
-           |     END AS INT)""".stripMargin))
-      .drop("c_", "off_", "n_", "rn_", "rk_", bcol)
-  }
-
   // -------------------------------------------------------------- orders_rfm
   /** RFM customer segmentation over orders: recency (days since the
     * customer's last order, against the corpus max date), frequency
@@ -1284,7 +1223,7 @@ object Analytics {
     * Scale: one custkey shuffle for the per-customer rollup; the corpus
     * max date and the three dimension ranges are broadcast 1-row
     * aggregates; each quintile is the bucketed two-pass exact rank
-    * (exactNtile above) — three bkt-partitioned shuffles of the
+    * (ExactRank.rank + ntile) — three bkt-partitioned shuffles of the
     * customer frame replace r6's three SINGLE-REDUCER global ntile
     * sorts, the shape that dies first at 100×. Descending dimensions
     * bucket on the negated value so the bucket index is non-decreasing
@@ -1311,16 +1250,18 @@ object Analytics {
       max((-col("monetary_cents")).cast("double")).as("m_mx"))
     val bucketed = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
       per.crossJoin(broadcast(rng))
-        .withColumn("bkt_r", eqWidthBkt(col("recency_days").cast("double"), col("r_mn"), col("r_mx")))
-        .withColumn("bkt_f", eqWidthBkt((-col("frequency")).cast("double"), col("f_mn"), col("f_mx")))
-        .withColumn("bkt_m", eqWidthBkt((-col("monetary_cents")).cast("double"), col("m_mn"), col("m_mx")))
+        .withColumn("bkt_r", ExactRank.eqWidthBucket(col("recency_days").cast("double"), col("r_mn"), col("r_mx")))
+        .withColumn("bkt_f", ExactRank.eqWidthBucket((-col("frequency")).cast("double"), col("f_mn"), col("f_mx")))
+        .withColumn("bkt_m", ExactRank.eqWidthBucket((-col("monetary_cents")).cast("double"), col("m_mn"), col("m_mx")))
         .drop("r_mn", "r_mx", "f_mn", "f_mx", "m_mn", "m_mx"))
-    val scored = exactNtile(
-      exactNtile(
-        exactNtile(bucketed,
-          "bkt_r", Seq(col("recency_days"), col("o_custkey")), 5, "r_score"),
-        "bkt_f", Seq(col("frequency").desc, col("o_custkey")), 5, "f_score"),
-      "bkt_m", Seq(col("monetary_cents").desc, col("o_custkey")), 5, "m_score")
+    def quintile(df: DataFrame, bkt: String, order: Seq[Column], out: String): DataFrame =
+      ExactRank.rank(df, Nil, bkt, order)
+        .withColumn(out, ExactRank.ntile(5)).drop("rk", "n", bkt)
+    val scored = quintile(
+      quintile(
+        quintile(bucketed, "bkt_r", Seq(col("recency_days"), col("o_custkey")), "r_score"),
+        "bkt_f", Seq(col("frequency").desc, col("o_custkey")), "f_score"),
+      "bkt_m", Seq(col("monetary_cents").desc, col("o_custkey")), "m_score")
     scored
       .select(col("o_custkey").as("custkey"), col("recency_days"),
         col("frequency"), dollars(col("monetary_cents")).as("monetary"),
@@ -1360,7 +1301,7 @@ object Analytics {
     * each ONE IEEE division of exact integers (cum via an integer
     * running sum over the 10-row decile frame, never a float cascade).
     * Scale: one custkey shuffle for the rollup; the decile assignment
-    * is the bucketed two-pass exact rank (exactNtile — bkt-partitioned
+    * is the bucketed two-pass exact rank (ExactRank — bkt-partitioned
     * row_number + histogram offsets), not a single-reducer global
     * ntile; everything after is 10 rows. Oracle (real ntile)
     * unchanged: AnalyticsSpec pins bit-equality. */
@@ -1374,10 +1315,10 @@ object Analytics {
       max((-col("mc")).cast("double")).as("d_mx"))
     val bucketed = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
       per.crossJoin(broadcast(rng))
-        .withColumn("bkt_d", eqWidthBkt((-col("mc")).cast("double"), col("d_mn"), col("d_mx")))
+        .withColumn("bkt_d", ExactRank.eqWidthBucket((-col("mc")).cast("double"), col("d_mn"), col("d_mx")))
         .drop("d_mn", "d_mx"))
-    val deciles = exactNtile(bucketed,
-        "bkt_d", Seq(col("mc").desc, col("o_custkey")), 10, "decile")
+    val deciles = ExactRank.rank(bucketed, Nil, "bkt_d", Seq(col("mc").desc, col("o_custkey")))
+      .withColumn("decile", ExactRank.ntile(10))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_customers"), sum(col("mc")).as("rc"))
     val wc = Window.orderBy(col("decile")).rowsBetween(Window.unboundedPreceding, 0)
@@ -2104,18 +2045,8 @@ object Analytics {
         .withColumn("bkt",
           size(filter(col("bnds"), b => b > col("rev").cast("double"))).cast("int"))
         .drop("bnds"))
-    val wOff = Window.orderBy(col("bkt")).rowsBetween(Window.unboundedPreceding, -1)
-    val offs = bucketed.groupBy(col("bkt")).agg(sum(col("rev")).as("brev"))
-      .withColumn("off", coalesce(sum(col("brev")).over(wOff),
-        lit(0).cast("decimal(38,0)")))
-      .withColumn("tot", sum(col("brev")).over(Window.partitionBy()))
-      .select(col("bkt"), col("off"), col("tot"))
-    val wIn = Window.partitionBy(col("bkt"))
-      .orderBy(col("rev").desc, col("pk"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val classed = bucketed
-      .join(broadcast(offs), Seq("bkt"))
-      .withColumn("cum", col("off") + sum(col("rev")).over(wIn))
+    val classed = ExactRank.runningSum(bucketed, Nil, "bkt",
+        Seq(col("rev").desc, col("pk")), col("rev"))
       .withColumn("cls",
         when(col("cum") * 100 <= col("tot") * 80, "A")
           .when(col("cum") * 100 <= col("tot") * 95, "B")

@@ -78,17 +78,25 @@ object Ann {
 
   /** Exact cosine top-k of `queries` (q_id, qv) against corpus `e`
     * (vec_id, v) — the yardstick and the degenerate-corpus fallback. */
-  private def bruteTopkFrom(e: DataFrame, queries: DataFrame): DataFrame = {
-    val cos = Vectors.cosine(col("qv"), col("v"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    broadcast(queries).join(e, col("q_id") =!= col("vec_id"))
-      .withColumn("cos", cos)
+  private def bruteTopkFrom(e: DataFrame, queries: DataFrame): DataFrame =
+    topK(broadcast(queries).join(e, col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"),
+        Vectors.cosine(col("qv"), col("v")).as("cos")))
+
+  /** The per-query top-K every search path ends in: `cands` carries
+    * (q_id, n_id, cos) and whatever `extra` reads; each query keeps its
+    * K best by (cos DESC, n_id), numbered 1..K as `rank`. */
+  private def topK(cands: DataFrame, extra: Column*): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
+    cands
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id").as("n_id"),
-        (round(col("cos"), 4) + 0.0).as("cos_sim"))
+      .select(Seq(col("q_id"), col("rank"), col("n_id"), cosSim(col("cos"))) ++ extra: _*)
       .orderBy(col("q_id"), col("rank"))
   }
+
+  /** A cosine as the output's `cos_sim`: rounded to 4 places, -0.0 → 0.0. */
+  private def cosSim(cos: Column): Column = (round(cos, 4) + 0.0).as("cos_sim")
 
   private val cosFoldSql =
     """list_reduce([qv[i]*v[i] for i in range(1, len(qv)+1)], (x, y) -> x + y)
@@ -130,13 +138,7 @@ object Ann {
       .select(col("q_id"), col("vec_id").as("n_id"),
         Vectors.cosine(col("qv"), col("v")).as("cos"))
       .dropDuplicates("q_id", "n_id")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    cands
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        (round(col("cos"), 4) + 0.0).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    topK(cands)
   }
 
   /** ±1 plane components of LSH table `t`, plane `p`, as a DuckDB list
@@ -406,18 +408,12 @@ object Ann {
     * the identical IEEE expression tree (same sqrt of the same dot,
     * same multiply, same divide), so every cos is bit-identical. */
   private def ivfTopkFrom(celled: DataFrame, probes: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     val p = probes.withColumn("nq", sqrt(Vectors.dot(col("qv"), col("qv"))))
     val c = celled.withColumn("nv", sqrt(Vectors.dot(col("v"), col("v"))))
-    broadcast(p).join(c, Seq("cell"))
+    topK(broadcast(p).join(c, Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        (Vectors.dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        (round(col("cos"), 4) + 0.0).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+        (Vectors.dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cos")))
   }
 
   /** The IVF top-K search given a built index — shared by the
@@ -824,17 +820,11 @@ object Ann {
       .withColumn("nv", sqrt(Vectors.dot(col("v"), col("v"))))
       .withColumn("salt", pmod(xxhash64(col("vec_id")), lit(BatchSalt)).cast("int"))
       .repartition(width, col("cell"), col("salt"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    probed.join(salted, Seq("cell", "salt"))
+    topK(probed.join(salted, Seq("cell", "salt"))
       .filter(col("q_id") =!= col("vec_id"))
       .join(broadcast(q2), Seq("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        (Vectors.dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        (round(col("cos"), 4) + 0.0).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+        (Vectors.dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cos")))
   }
 
   // -------------------------------------------------------------- vec_stats
@@ -1051,15 +1041,10 @@ object Ann {
 
     // exact re-rank on the original vectors (cosine is scale-invariant,
     // so output parity with ann_brute_topk's rounding is preserved)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
+    topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
       .join(broadcast(q0), Seq("q_id"))
-      .withColumn("cos", Vectors.cosine(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id").as("n_id"),
-        (round(col("cos"), 4) + 0.0).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+      .select(col("q_id"), col("vec_id").as("n_id"),
+        Vectors.cosine(col("qv"), col("v")).as("cos")))
   }
 
   /** The ENTIRE PQ pipeline as a DuckDB mirror (the ann_lsh_topk
@@ -1367,15 +1352,10 @@ object Ann {
           .withColumn("crank", row_number().over(wAdc))
           .filter(col("crank") <= IvfPqRerank)
           .select(col("q_id"), col("vec_id"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-        cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
+        topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
           .join(broadcast(q0), Seq("q_id"))
-          .withColumn("cos", Vectors.cosine(col("qv"), col("v")))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= K)
-          .select(col("q_id"), col("rank"), col("vec_id").as("n_id"),
-            (round(col("cos"), 4) + 0.0).as("cos_sim"))
-          .orderBy(col("q_id"), col("rank"))
+          .select(col("q_id"), col("vec_id").as("n_id"),
+            Vectors.cosine(col("qv"), col("v")).as("cos")))
     }
   }
 
@@ -1595,16 +1575,10 @@ object Ann {
       .select(col("vec_id").as("q_id"), col("label").as("q_label"), col("v").as("qv"))
     buildIvfIndex(e, n) match {
       case None =>
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-        broadcast(q0).join(e0, col("q_id") =!= col("vec_id") &&
+        topK(broadcast(q0).join(e0, col("q_id") =!= col("vec_id") &&
             col("q_label") === col("label"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            Vectors.cosine(col("qv"), col("v")).as("cos"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= K)
-          .select(col("q_id"), col("rank"), col("n_id"),
-            (round(col("cos"), 4) + 0.0).as("cos_sim"))
-          .orderBy(col("q_id"), col("rank"))
+            Vectors.cosine(col("qv"), col("v")).as("cos")))
       case Some(idx) =>
         val qRows = e.filter(col("vec_id") < NQueries).select(col("vec_id"), col("v"))
           .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -1612,17 +1586,11 @@ object Ann {
         import session.implicits._
         val probes = driverProbes(idx, qRows, FilteredProbe).toDF("q_id", "qv", "cell")
         val labeled = idx.celled.join(e0.select(col("vec_id"), col("label")), Seq("vec_id"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-        broadcast(probes).join(labeled, Seq("cell"))
+        topK(broadcast(probes).join(labeled, Seq("cell"))
           .join(broadcast(q0.select(col("q_id"), col("q_label"))), Seq("q_id"))
           .filter(col("q_id") =!= col("vec_id") && col("label") === col("q_label"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            Vectors.cosine(col("qv"), col("v")).as("cos"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= K)
-          .select(col("q_id"), col("rank"), col("n_id"),
-            (round(col("cos"), 4) + 0.0).as("cos_sim"))
-          .orderBy(col("q_id"), col("rank"))
+            Vectors.cosine(col("qv"), col("v")).as("cos")))
     }
   }
 
@@ -1681,18 +1649,12 @@ object Ann {
     val n = e.count()
     val q = e0.filter(col("vec_id") % 37 === 0)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"), col("v").as("qv"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     buildIvfIndex(e, n) match {
       case None => // degenerate corpus (<2 seeds ⇒ tiny): exact filtered scan
-        broadcast(q).join(e0, col("q_id") =!= col("vec_id") &&
+        topK(broadcast(q).join(e0, col("q_id") =!= col("vec_id") &&
             col("q_label") === col("label"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            Vectors.cosine(col("qv"), col("v")).as("cos"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= K)
-          .select(col("q_id"), col("rank"), col("n_id"),
-            (round(col("cos"), 4) + 0.0).as("cos_sim"))
-          .orderBy(col("q_id"), col("rank"))
+            Vectors.cosine(col("qv"), col("v")).as("cos")))
       case Some(idx) =>
         def topCellsCol(v: Column): Column = kcol(graft.expressions.TopCells(
           kexp(v), idx.coarse, idx.refinedSub, idx.maxSub, BatchProbeCoarse,
@@ -1731,17 +1693,12 @@ object Ann {
             explode(topCellsCol(col("qv"))).as("cell"))
           .withColumn("salt", explode(array((0 until BatchSalt).map(lit): _*)))
           .repartition(width, col("cell"), col("label"), col("salt"))
-        probed.join(labeled.repartition(width, col("cell"), col("label"), col("salt")),
+        topK(probed.join(labeled.repartition(width, col("cell"), col("label"), col("salt")),
             Seq("cell", "label", "salt"))
           .filter(col("q_id") =!= col("vec_id"))
           .join(broadcast(q2), Seq("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            (Vectors.dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cos"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= K)
-          .select(col("q_id"), col("rank"), col("n_id"),
-            (round(col("cos"), 4) + 0.0).as("cos_sim"))
-          .orderBy(col("q_id"), col("rank"))
+            (Vectors.dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cos")))
     }
   }
 
@@ -2026,7 +1983,7 @@ object Ann {
           .filter(col("q_id") < NQueries)
         broadcast(q).join(e, col("q_id") =!= col("vec_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            (round(Vectors.cosine(col("qv"), col("v")), 4) + 0.0).as("cos_sim"))
+            cosSim(Vectors.cosine(col("qv"), col("v"))))
       case Some(idx) =>
         val qRows = e.filter(col("vec_id") < NQueries)
           .select(col("vec_id"), col("v"))
@@ -2037,7 +1994,7 @@ object Ann {
         broadcast(probes).join(idx.celled, Seq("cell"))
           .filter(col("q_id") =!= col("vec_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            (round(Vectors.cosine(col("qv"), col("v")), 4) + 0.0).as("cos_sim"))
+            cosSim(Vectors.cosine(col("qv"), col("v"))))
     }
     out.filter(col("cos_sim") >= RangeTau)
       .orderBy(col("q_id"), col("cos_sim").desc, col("n_id"))
@@ -2454,16 +2411,11 @@ object Ann {
       .withColumn("cs", row_number().over(wShard)).filter(col("cs") <= cRe)
       .withColumn("crank", row_number().over(wDot)).filter(col("crank") <= cRe)
       .select(col("q_id"), col("vec_id"), col("sq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(q0), Seq("q_id"))
-      .withColumn("cos", Vectors.cosine(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id").as("n_id"),
-        (round(col("cos"), 4) + 0.0).as("cos_sim"),
-        (round(col("sq"), 4) + 0.0).as("sq_score"))
-      .orderBy(col("q_id"), col("rank"))
+    topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
+        .join(broadcast(q0), Seq("q_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"),
+          Vectors.cosine(col("qv"), col("v")).as("cos"), col("sq")),
+      (round(col("sq"), 4) + 0.0).as("sq_score"))
   }
 
   lazy val annSqTopkSql: String = {
@@ -2590,16 +2542,11 @@ object Ann {
       .withColumn("crank", row_number().over(wSq))
       .filter(col("crank") <= IvfSqRerank)
       .select(col("q_id"), col("vec_id"), col("sq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(q0), Seq("q_id"))
-      .withColumn("cos", Vectors.cosine(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id").as("n_id"),
-        (round(col("cos"), 4) + 0.0).as("cos_sim"),
-        (round(col("sq"), 4) + 0.0).as("ivfsq_score"))
-      .orderBy(col("q_id"), col("rank"))
+    topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
+        .join(broadcast(q0), Seq("q_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"),
+          Vectors.cosine(col("qv"), col("v")).as("cos"), col("sq")),
+      (round(col("sq"), 4) + 0.0).as("ivfsq_score"))
   }
 
   /** The composed IVF-SQ mirror: ivfIndexCtes prunes to probed cells,
@@ -2719,15 +2666,11 @@ object Ann {
       .withColumn("cs", row_number().over(wShard)).filter(col("cs") <= c)
       .withColumn("crank", row_number().over(wHam)).filter(col("crank") <= c)
       .select(col("q_id"), col("vec_id"), col("ham"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(q0), Seq("q_id"))
-      .withColumn("cos", Vectors.cosine(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id").as("n_id"),
-        (round(col("cos"), 4) + 0.0).as("cos_sim"), col("ham"))
-      .orderBy(col("q_id"), col("rank"))
+    topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
+        .join(broadcast(q0), Seq("q_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"),
+          Vectors.cosine(col("qv"), col("v")).as("cos"), col("ham")),
+      col("ham"))
   }
 
   lazy val annHammingTopkSql: String = {

@@ -322,43 +322,24 @@ object TextStats {
     * non-decreasing in the order key → (lang, bkt) histogram (≤
     * |langs|·64 rows; offset windows run over the HISTOGRAM, never the
     * data) → within-(lang, bkt) row_number + per-lang offset = exact
-    * per-lang rank → Spark's closed-form ntile arithmetic. Bit-identical
-    * to DuckDB's ntile(3) because (avg_neg_logp, doc_id) totally orders
-    * each language. The LM-score frame is staged once (it feeds the
+    * per-lang rank → Spark's closed-form ntile arithmetic (ExactRank).
+    * Bit-identical to DuckDB's ntile(3) because (avg_neg_logp, doc_id)
+    * totally orders each language. The LM-score frame is staged once (it feeds the
     * range probe and the scoring join); its derivation is the
     * lmScoreCtes shared constant on the oracle side. */
   def corpusCcnetBuckets(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
     val scored = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
       lmScoreOf(docs).join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
     val rng = scored.groupBy(col("lang")).agg(
       min(col("avg_neg_logp")).as("mn"), max(col("avg_neg_logp")).as("mx"))
-    val B = 64
     val bucketed = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
       scored.join(broadcast(rng), Seq("lang"))
-        .withColumn("bkt", coalesce(greatest(lit(0L), least(lit(B - 1L),
-          floor((col("avg_neg_logp") - col("mn")) * B /
-            (col("mx") - col("mn") + lit(1e-6))))), lit(0L)))
+        .withColumn("bkt", ExactRank.eqWidthBucket(col("avg_neg_logp"), col("mn"), col("mx")))
         .drop("mn", "mx"))
-    val hist = bucketed.groupBy(col("lang"), col("bkt")).agg(count(lit(1)).as("c_"))
-    val wOff = Window.partitionBy(col("lang")).orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = hist
-      .withColumn("off_", coalesce(sum(col("c_")).over(wOff), lit(0L)))
-      .withColumn("n_", sum(col("c_")).over(Window.partitionBy(col("lang"))))
-      .select(col("lang"), col("bkt"), col("off_"), col("n_"))
-    val wLoc = Window.partitionBy(col("lang"), col("bkt"))
-      .orderBy(col("avg_neg_logp"), col("doc_id"))
-    val tiled = bucketed
-      .withColumn("rn_", row_number().over(wLoc))
-      .join(broadcast(offs), Seq("lang", "bkt"))
-      .withColumn("rk_", col("off_") + col("rn_"))
-      .withColumn("t_", expr(
-        """CAST(CASE WHEN rk_ <= (n_ % 3) * (n_ DIV 3 + 1)
-          |          THEN (rk_ - 1) DIV (n_ DIV 3 + 1) + 1
-          |          ELSE (n_ % 3) + (rk_ - 1 - (n_ % 3) * (n_ DIV 3 + 1)) DIV (n_ DIV 3) + 1
-          |     END AS INT)""".stripMargin))
+    val tiled = ExactRank.rank(bucketed, Seq("lang"), "bkt",
+        Seq(col("avg_neg_logp"), col("doc_id")))
+      .withColumn("t_", ExactRank.ntile(3))
     tiled.select(col("doc_id"), col("lang"), col("avg_neg_logp"),
         when(col("t_") === 1, "head").when(col("t_") === 2, "middle")
           .otherwise("tail").as("ppl_bucket"))

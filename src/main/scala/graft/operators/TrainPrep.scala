@@ -975,7 +975,7 @@ object TrainPrep {
     *
     * Scale: a global prefix SUM over a data-scaled order is the same
     * banned single-reducer shape as a global rank, so this is the
-    * rank_stats_scalable cascade applied to a WEIGHTED prefix: quality
+    * ExactRank cascade applied to a WEIGHTED prefix (runningSum): quality
     * maps to 64 order-preserving buckets by STATIC integer arithmetic
     * (q16's range is closed — no range-probe job), the per-bucket token
     * totals make a 64-row histogram whose offset windows run above the
@@ -1002,17 +1002,9 @@ object TrainPrep {
     val bucketed = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
       base.withColumn("bkt",
         expr("CAST((CAST(65536 AS BIGINT) - q16) * 64 DIV CAST(65537 AS BIGINT) AS BIGINT)")))
-    val hist = bucketed.groupBy(col("bkt")).agg(sum(col("n_tokens")).as("bt"))
-    val wOff = Window.orderBy(col("bkt")).rowsBetween(Window.unboundedPreceding, -1)
-    val offs = hist
-      .withColumn("off", coalesce(sum(col("bt")).over(wOff), lit(0L)))
-      .select(col("bkt"), col("off"))
-    val wLoc = Window.partitionBy(col("bkt")).orderBy(col("q16").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    bucketed
-      .withColumn("wc", sum(col("n_tokens")).over(wLoc))
-      .join(broadcast(offs), Seq("bkt"))
-      .withColumn("cum_tokens", col("off") + col("wc"))
+    ExactRank.runningSum(bucketed, Nil, "bkt", Seq(col("q16").desc, col("doc_id")),
+        col("n_tokens"))
+      .withColumnRenamed("cum", "cum_tokens")
       .filter(col("cum_tokens") <= budget)
       .select(col("doc_id"), col("q16"), col("n_tokens"), col("cum_tokens"))
       .orderBy(col("q16").desc, col("doc_id"))
@@ -1379,16 +1371,14 @@ object TrainPrep {
     * order-independent aggregate computed as a window over the GRAM
     * partition (each partition = one gram's occurrence list, bounded by
     * its dup count; one shuffle on the gram hash, no gram-stream
-    * self-join), then one doc-keyed rollup. The distinct (doc, gram)
-    * frame is staged once for both. Novelty divides identical integers
-    * once at the output boundary. */
+    * self-join), then one doc-keyed rollup. Novelty divides identical
+    * integers once at the output boundary. */
   def corpusNgramNovelty(spark: SparkSession, dir: String): DataFrame =
     corpusNgramNoveltyFrom(Tables.documents(spark, dir))
 
   private[graft] def corpusNgramNoveltyFrom(docs: DataFrame): DataFrame = {
-    val g = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
-      docs.select(col("doc_id"), explode(Text.shingleHashes16(col("text"), 5)).as("h"))
-        .distinct())
+    val g = docs.select(col("doc_id"), explode(Text.shingleHashes16(col("text"), 5)).as("h"))
+      .distinct()
     val w = Window.partitionBy(col("h"))
     g.withColumn("first_doc", min(col("doc_id")).over(w))
       .groupBy(col("doc_id"))

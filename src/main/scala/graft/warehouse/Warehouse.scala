@@ -68,14 +68,13 @@ object Warehouse {
   def fact(spark: SparkSession, dir: String): DataFrame =
     factFrom(Statements.income(spark, dir))
 
-  /** fact() for consumers that aggregate DIRECTLY over the derivation:
-    * the parse chain runs once, in its own codegen stage (stageBarrier),
-    * and the null-filter evaluates on the materialized columns above the
-    * barrier. Without this, predicate pushdown duplicates the
-    * fmt→re-parse expression tree below the projection AND whole-stage
-    * codegen inlines the lot into the aggregate's generated method —
-    * past Janino's 64 KB limit → silent interpreted fallback on the
-    * hottest stage (CodegenGateSpec gates the whole registry).
+  /** fact() for consumers that read the derivation MORE THAN ONCE (e.g.
+    * fin_sparse_fill's actuals and its dimension frame): the statements
+    * derivation and parse chain run once behind a stage barrier, and the
+    * null-filter evaluates on the materialized columns above it. Unstaged,
+    * each reader re-runs the derivation (fin_sparse_fill 0.83 → 2.27 s
+    * at sf0.1). Codegen does not need the barrier: every registry query
+    * runs fallback-free without it (see the stageBarrier scaladoc).
     *
     * Building this frame runs nothing: factDerived's ffill window
     * shuffle and marker-frame exchanges run when a job first reads the
@@ -653,7 +652,7 @@ object Warehouse {
     * raw deltas into "is this dip normal for March" (and the
     * deseasonalization factor for fin_forecast_linear's inputs).
     *
-    * Scale: one fact shuffle (the monthly Revenue rollup, staged); the
+    * Scale: one fact shuffle (the monthly Revenue rollup); the
     * calendar-month rollup above it is ≤ |dept|·12 rows, staged once
     * for its two consumers (the dept total is an aggregate over the
     * aggregate, the common_size discipline). The index is ONE IEEE
@@ -661,10 +660,9 @@ object Warehouse {
     * ratio of averages without ever forming a float average — NULL
     * where a department's revenue nets to zero. */
   def finSeasonality(spark: SparkSession, dir: String): DataFrame = {
-    val monthly = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
-      upserted(spark, dir).filter(col("category") === "Revenue")
-        .groupBy(col("department"), col("year"), col("month"))
-        .agg(sum(cents(col("amount"))).as("tc")))
+    val monthly = upserted(spark, dir).filter(col("category") === "Revenue")
+      .groupBy(col("department"), col("year"), col("month"))
+      .agg(sum(cents(col("amount"))).as("tc"))
     val bym = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
       monthly.groupBy(col("department"), col("month"))
         .agg(sum(col("tc")).as("s_m"), count(lit(1)).as("n_m")))
@@ -789,7 +787,7 @@ object Warehouse {
     * total delta for that month, and the line's share of it. The
     * standard FP&A "variance bridge" read next to the trend report.
     *
-    * Scale: one fact shuffle (the monthly rollup, staged once); the
+    * Scale: one fact shuffle (the monthly rollup); the
     * per-line lag runs over tiny per-(dept, GL) month series and the
     * dept-total sum over per-(dept, month) partitions bounded by the GL
     * chart — both windows sit ABOVE the aggregate. Integer-cents
@@ -797,10 +795,9 @@ object Warehouse {
     * (order-independent), the share one IEEE division of exact
     * integers, NULL when the department's month nets to zero. */
   def finVarianceWalk(spark: SparkSession, dir: String): DataFrame = {
-    val monthly = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
-      upserted(spark, dir)
-        .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-        .agg(sum(cents(col("amount"))).as("tc")))
+    val monthly = upserted(spark, dir)
+      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
+      .agg(sum(cents(col("amount"))).as("tc"))
     val wLag = Window.partitionBy(col("department"), col("gl_code"))
       .orderBy(col("year"), col("month"))
     val wMonth = Window.partitionBy(col("department"), col("year"), col("month"))
@@ -1198,7 +1195,7 @@ object Warehouse {
     * identical) are skipped — the 0-MAD rule would flag every non-
     * median month, which is a data-quality signal, not an anomaly.
     *
-    * Scale: one fact shuffle (the monthly rollup, staged) + ONE
+    * Scale: one fact shuffle (the monthly rollup) + ONE
     * exchange on the fine (department, GL) key shared by all four
     * window passes (two rank sorts, two partition sums) — partitions
     * are calendar-bounded month series, never data-scaled; no joins at
@@ -1216,9 +1213,9 @@ object Warehouse {
     finAnomalyMadFrom(stagedUpserted(spark, dir))
 
   private[graft] def finAnomalyMadFrom(up: DataFrame): DataFrame = {
-    val monthly = stageBarrier(up
+    val monthly = up
       .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc")))
+      .agg(sum(cents(col("amount"))).as("tc"))
     val wp = Window.partitionBy(col("department"), col("gl_code"))
     val w1 = wp.orderBy(col("tc"), col("year"), col("month"))
     def pick(rank: Column): Column =
@@ -1301,7 +1298,7 @@ object Warehouse {
     * dollars), NOT re-rounded: the 20000·n divisor makes exact .00005
     * quotients common and the engines split round-half differently.
     *
-    * Scale: one fact shuffle (the staged monthly rollup) + ONE exchange
+    * Scale: one fact shuffle (the monthly rollup) + ONE exchange
     * on (department, GL) carrying all five window passes (partition
     * count/sum, two prefix sums, two running minima — same key, shared
     * sort); partitions are calendar-bounded month series. No joins. */
@@ -1316,9 +1313,9 @@ object Warehouse {
     finCusumFrom(stagedUpserted(spark, dir))
 
   private[graft] def finCusumFrom(up: DataFrame): DataFrame = {
-    val monthly = stageBarrier(up
+    val monthly = up
       .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc")))
+      .agg(sum(cents(col("amount"))).as("tc"))
     val wp = Window.partitionBy(col("department"), col("gl_code"))
     val wo = wp.orderBy(col("year"), col("month"))
       .rowsBetween(Window.unboundedPreceding, 0)

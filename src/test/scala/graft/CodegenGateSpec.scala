@@ -15,13 +15,10 @@ class CodegenGateSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-        try {
+        FailurePolicy[Option[String]] {
           SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
           None
-        } catch {
-          case e: Throwable =>
-            Some(s"$name: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(300)}")
-        }
+        }(reason => Some(s"$name: $reason"))
       }
       assert(failures.isEmpty, s"codegen fallback (or failure) in:\n${failures.mkString("\n")}")
     } finally spark.conf.set("spark.sql.codegen.fallback", prev)

@@ -30,14 +30,34 @@ class PlanInvariantsSpec extends SparkSpec {
     val g = new CalibGuard
     assert(g.run(() => 1.5) == 1.5 && g.firstError.isEmpty)
     assert(g.run(() => throw new RuntimeException("box on fire")) == -1.0)
-    assert(g.firstError.contains("box on fire"))
+    assert(g.firstError.contains("java.lang.RuntimeException: box on fire"))
     // a later failure must NOT overwrite the root cause
     assert(g.run(() => throw new RuntimeException("secondary")) == -1.0)
-    assert(g.firstError.contains("box on fire"))
+    assert(g.firstError.contains("java.lang.RuntimeException: box on fire"))
     // fatal errors escape the guard (bench must die, not publish)
     intercept[OutOfMemoryError] {
       g.run(() => throw new OutOfMemoryError("synthetic"))
     }
+    // FailurePolicy, the one policy CalibGuard, Bench, Verify and
+    // CodegenGateSpec share. NonFatal: recorded with class and message,
+    // the recovery value stands in, the run goes on.
+    val seen = scala.collection.mutable.ListBuffer.empty[String]
+    assert(FailurePolicy(1)(r => { seen += r; -1 }) == 1 && seen.isEmpty)
+    assert(FailurePolicy[Int](throw new IllegalStateException("bad plan"))(
+      r => { seen += r; -1 }) == -1)
+    assert(seen.toList == List("java.lang.IllegalStateException: bad plan"))
+    // VirtualMachineError: recorded first, then rethrown to end the run
+    intercept[StackOverflowError] {
+      FailurePolicy[Int](throw new StackOverflowError())(r => { seen += r; -1 })
+    }
+    assert(seen.last == "java.lang.StackOverflowError")
+    // other fatal throwables pass through unrecorded
+    intercept[InterruptedException] {
+      FailurePolicy[Int](throw new InterruptedException("stop"))(r => { seen += r; -1 })
+    }
+    assert(seen.size == 2)
+    // the shared JSON string escaper of Bench's and Verify's records
+    assert(FailurePolicy.jsonString("a\"b\\c\n\t\u0001") == "\"a\\\"b\\\\c\\n\\t\\u0001\"")
   }
 
   test("no registered query plans a non-broadcast cartesian product") {
