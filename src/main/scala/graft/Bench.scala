@@ -24,16 +24,22 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val n = passes
     // bytes-derived partitions (floors at the core count for sf<=1, so
     // bench numbers at sf0.1 are unchanged; scales up for sf10/sf100)
     val spark = GraftSession.builder(sfDir = sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    report(sfDir, time(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted, passes))
+    report(sfDir, time(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted, n))
     spark.stop()
   }
 
-  /** Round-robin passes per query: SPARK_GRAFT_BENCH_PASSES, else 3. */
-  private[graft] def passes: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+  /** Round-robin passes per query, given the value of
+    * SPARK_GRAFT_BENCH_PASSES: that value when set (a positive integer,
+    * else it fails here), else 3. */
+  private[graft] def passesFrom(env: Option[String]): Int =
+    env.map(GraftSession.positiveInt("SPARK_GRAFT_BENCH_PASSES", _)).getOrElse(3)
+
+  private[graft] def passes: Int = passesFrom(sys.env.get("SPARK_GRAFT_BENCH_PASSES"))
 
   /** What one run of [[time]] measured: each query's min and median
     * seconds (failed queries left out, with their first error), each

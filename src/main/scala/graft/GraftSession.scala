@@ -56,7 +56,7 @@ object GraftSession {
 
   /** The value `v` of env var `name` as a positive integer; anything
     * else fails here, naming the variable, rather than later in Spark. */
-  private def positiveInt(name: String, v: String): Int =
+  private[graft] def positiveInt(name: String, v: String): Int =
     v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
       s"$name must be a positive integer, got '$v'"))
 

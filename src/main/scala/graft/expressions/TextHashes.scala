@@ -366,18 +366,6 @@ object TextHashes {
       Array[Any](n, nw, nSel, selMin, selMax, new GenericArrayData(fpArr)))
   }
 
-  def sortedIntersectCount(a: ArrayData, b: ArrayData): Int = {
-    val na = a.numElements(); val nb = b.numElements()
-    var i = 0; var j = 0; var c = 0
-    while (i < na && j < nb) {
-      val cmp = a.getUTF8String(i).compareTo(b.getUTF8String(j))
-      if (cmp == 0) { c += 1; i += 1; j += 1 }
-      else if (cmp < 0) i += 1
-      else j += 1
-    }
-    c
-  }
-
   /** Element-returning twin of sortedLongIntersectCount: the sorted
     * common elements of two pre-sorted array<bigint> — the closing
     * vertices of the triangles an oriented edge anchors
@@ -395,7 +383,8 @@ object TextHashes {
     new GenericArrayData(java.util.Arrays.copyOf(out, c))
   }
 
-  /** Long twin of sortedIntersectCount (graph adjacency lists). */
+  /** |a ∩ b| of two sorted distinct array<bigint> by linear merge —
+    * O(|a|+|b|) compares, no per-row hash set (graph adjacency lists). */
   def sortedLongIntersectCount(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var c = 0
@@ -601,28 +590,6 @@ case class ShingleJaccard(left: Expression, right: Expression, k: Int)
     copy(left = newLeft, right = newRight)
 }
 
-/** sorted_intersect_count(a, b): |a ∩ b| of two SORTED distinct string
-  * arrays by linear merge — O(|a|+|b|) binary compares, no per-row hash
-  * set. Set-equal to size(array_intersect(a, b)) on distinct inputs
-  * (the oracle keeps list_intersect), but Spark's generic-type
-  * ArrayIntersect builds a fresh hash structure per row, which at 145k
-  * candidate pairs × ~50-element md5 arrays dominated dedup_containment
-  * (~10 s of a 14 s plan at sf0.1); the merge is ~50×. Callers must
-  * pre-sort (one array_sort per CLASS, amortized over its candidates). */
-case class SortedIntersectCount(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "sorted_intersect_count"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHashes.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.expressions.TextHashes.sortedIntersectCount($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
 /** sorted_long_intersect(a, b): the sorted common elements of two
   * pre-sorted array<bigint> — graph_similar_parts' triangle-credit
   * generator (see TextHashes.sortedLongIntersect). */
@@ -641,9 +608,9 @@ case class SortedLongIntersect(left: Expression, right: Expression)
 }
 
 /** sorted_long_intersect_count(a, b) over pre-sorted array<bigint> —
-  * the adjacency-list merge for graph_triangles (same argument as the
-  * string variant above: per-row hash structures lose to a linear
-  * merge on sorted inputs by an order of magnitude). */
+  * the adjacency-list merge for graph_triangles: Spark's generic
+  * array_intersect builds a hash structure per row, which loses to a
+  * linear merge on sorted inputs by an order of magnitude. */
 case class SortedLongIntersectCount(left: Expression, right: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType

@@ -19,6 +19,15 @@ import org.apache.spark.sql.functions._
   */
 object Financial {
 
+  /** Exact money: a 2-decimal dollars-as-double → integer cents. Money is
+    * summed over these BIGINTs, so every engine adds the same integers in
+    * any order and agrees bit for bit (the oracles' `CAST(round(x*100) AS
+    * BIGINT)`). */
+  def cents(c: Column): Column = round(c * 100).cast("long")
+
+  /** Integer cents → dollars as double: one division, at output. */
+  def dollars(c: Column): Column = c.cast("double") / 100.0
+
   /** Parse an accounting amount string: strips '$' and ',', interprets
     * '(…)' as negative, yields null for blanks or non-numeric garbage.
     *

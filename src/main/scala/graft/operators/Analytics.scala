@@ -3,16 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.Financial.{cents, dollars}
 import graft.sources.Tables
+import graft.warehouse.Warehouse
 
 /** Downstream-analytics operators the warehouse exists to feed
   * (reference `docs/architecture_overview.md`: "reporting, trend
   * analysis, reconciliation, and downstream analytics") — the behavioral
   * and reporting shapes beyond plain aggregation. All oracled. */
 object Analytics {
-
-  private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
-  private def dollars(c: org.apache.spark.sql.Column) = c.cast("double") / 100.0
 
   // --------------------------------------------------------------- cube_agg
   /** CUBE over (status, priority): all four grouping-set combinations in
@@ -394,25 +393,30 @@ object Analytics {
     * for dense time series. Scale: the dimension frame is tiny (distinct
     * triples x 12), the actuals aggregate is map-side combined, and the
     * join is broadcast-able. */
-  def finSparseFill(spark: SparkSession, dir: String): DataFrame = {
-    // factStaged: the actuals and the dimension frame both read the
-    // statements derivation; staged, it runs once for the two of them.
-    val f = graft.warehouse.Warehouse.factStaged(
-      spark, dir, "department", "gl_code", "year", "month", "amount")
-    val actual = f.groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
-    val dims = f.select(col("department"), col("gl_code"), col("year")).distinct()
-      .withColumn("month", explode(sequence(lit(1), lit(12))))
-    dims.join(actual, Seq("department", "gl_code", "year", "month"), "left")
+  def finSparseFill(spark: SparkSession, dir: String): DataFrame =
+    monthSpine(spark, dir)
       .select(col("department"), col("gl_code"), col("year"), col("month"),
         dollars(coalesce(col("tc"), lit(0L))).as("total"),
         col("tc").isNull.as("filled"))
       .orderBy(col("department"), col("gl_code"), col("year"), col("month"))
+
+  /** The dense month spine fin_sparse_fill and fin_interpolate share:
+    * every (department, GL, year) × months 1-12, left-joined to the
+    * monthly cents actuals (`tc`, null in silent months). The actuals and
+    * the dimension frame both read the statements derivation; staged
+    * (factStaged), it runs once for the two of them. */
+  private def monthSpine(spark: SparkSession, dir: String): DataFrame = {
+    val f = Warehouse.factStaged(
+      spark, dir, "department", "gl_code", "year", "month", "amount")
+    val actual = Warehouse.rollupCents(f, Warehouse.DeptGlMonth)
+    val dims = f.select(col("department"), col("gl_code"), col("year")).distinct()
+      .withColumn("month", explode(sequence(lit(1), lit(12))))
+    dims.join(actual, Seq("department", "gl_code", "year", "month"), "left")
   }
 
-  val finSparseFillSql: String = {
-    val factCte = graft.warehouse.Warehouse.factCtesPublic
-    s"""WITH $factCte,
+  /** monthSpine's `actual` and `dims` in SQL. */
+  private val monthSpineCtes: String =
+    s"""${Warehouse.factCtes},
        |actual AS (
        |  SELECT department, gl_code, year, month,
        |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
@@ -420,7 +424,10 @@ object Analytics {
        |dims AS (
        |  SELECT department, gl_code, year, m.month
        |  FROM (SELECT DISTINCT department, gl_code, year FROM fin_fact)
-       |  CROSS JOIN (SELECT CAST(i AS INT) AS month FROM range(1, 13) t(i)) m)
+       |  CROSS JOIN (SELECT CAST(i AS INT) AS month FROM range(1, 13) t(i)) m)""".stripMargin
+
+  val finSparseFillSql: String =
+    s"""WITH $monthSpineCtes
        |SELECT d.department, d.gl_code, d.year, d.month,
        |       CAST(COALESCE(a.tc, 0) AS DOUBLE)/100.0 AS total,
        |       a.tc IS NULL AS filled
@@ -428,7 +435,6 @@ object Analytics {
        |  ON d.department = a.department AND d.gl_code = a.gl_code
        | AND d.year = a.year AND d.month = a.month
        |ORDER BY d.department, d.gl_code, d.year, d.month""".stripMargin
-  }
 
   // --------------------------------------------------------- fin_interpolate
   /** fin_sparse_fill's analytical twin: silent months take the LINEAR
@@ -442,13 +448,7 @@ object Analytics {
     * so the oracle mirrors it bit-for-bit. Months outside the observed
     * range extrapolate flat from the nearest edge (kind='edge'). */
   def finInterpolate(spark: SparkSession, dir: String): DataFrame = {
-    val f = graft.warehouse.Warehouse.factStaged(
-      spark, dir, "department", "gl_code", "year", "month", "amount")
-    val actual = f.groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
-    val dims = f.select(col("department"), col("gl_code"), col("year")).distinct()
-      .withColumn("month", explode(sequence(lit(1), lit(12))))
-    val spine = dims.join(actual, Seq("department", "gl_code", "year", "month"), "left")
+    val spine = monthSpine(spark, dir)
       .withColumn("m_idx", col("year") * 12 + col("month") - 1)
     val w = Window.partitionBy(col("department"), col("gl_code")).orderBy(col("m_idx"))
     val before = w.rowsBetween(Window.unboundedPreceding, -1)
@@ -471,17 +471,8 @@ object Analytics {
       .orderBy(col("department"), col("gl_code"), col("year"), col("month"))
   }
 
-  val finInterpolateSql: String = {
-    val factCte = graft.warehouse.Warehouse.factCtesPublic
-    s"""WITH $factCte,
-       |actual AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM fin_fact GROUP BY department, gl_code, year, month),
-       |dims AS (
-       |  SELECT department, gl_code, year, m.month
-       |  FROM (SELECT DISTINCT department, gl_code, year FROM fin_fact)
-       |  CROSS JOIN (SELECT CAST(i AS INT) AS month FROM range(1, 13) t(i)) m),
+  val finInterpolateSql: String =
+    s"""WITH $monthSpineCtes,
        |spine AS (
        |  SELECT d.department, d.gl_code, d.year, d.month, a.tc,
        |         d.year*12 + d.month - 1 AS m_idx
@@ -513,7 +504,6 @@ object Analytics {
        |            ELSE 'edge' END AS kind
        |FROM nbr
        |ORDER BY department, gl_code, year, month""".stripMargin
-  }
 
   // --------------------------------------------------------- scd2_intervals
   /** SCD2 dimension versioning from a change stream: collapse each

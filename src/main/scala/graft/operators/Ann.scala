@@ -725,26 +725,6 @@ object Ann {
     }
   }
 
-  /** The scoring tail shared by the in-query batch search and its staged
-    * twin: explode each query's nprobe cells, cell-keyed join against
-    * the celled corpus, exact cosine, per-query top-K.
-    *
-    * r15 (guide §1/§2 measured, §7.4 failure signature): the r14 shape
-    * left the exploded probe frame (q_id, qv, cell) un-exchanged, so
-    * AQE had only a scan-derived ESTIMATE of it — at sf100 it picked a
-    * broadcast of a ~121 MB frame (54k queries × nprobe × a 64-double
-    * vector each) whose HashedRelation build died in GC (the committed
-    * probe: 134 MB single allocations, SparkContext shutdown at ~286 s
-    * — the missing sf100 batch row). The probe side now repartitions on
-    * `cell` BEFORE the join: AQE sees the exchange's REAL bytes, so at
-    * gate scale it still broadcasts (a few hundred KB) and past the
-    * threshold it degrades to the cell-keyed shuffle join the scaladoc
-    * always promised — the corpus exchanges once on cell, the probe
-    * frame once (|Q|·nprobe rows), never a data-scaled broadcast.
-    * Norms are hoisted per the ivfTopkFrom r15 note: nq once per query
-    * BEFORE the nprobe explode, nv once per corpus row; the per-pair
-    * score dot/(nq·nv) is the identical IEEE expression tree,
-    * bit-for-bit. */
   /** Salt width for the batch scoring join (guide §2.5, §8): candidate
     * work is the join's OUTPUT (|cell| corpus rows × probes per cell),
     * so a few populous cells concentrate billions of scored pairs into
@@ -760,25 +740,6 @@ object Ann {
     * see ivfBatchTail. */
   private val BatchSalt = 64
 
-  /** The scoring tail shared by the batch searches: explode each
-    * query's nprobe cells, cell-keyed join against the celled corpus,
-    * exact cosine, per-query top-K.
-    *
-    * r15 (guide §8 — move decisions on small rows, attach payloads
-    * once): the probe frame shuffles only (q_id, cell, salt) — the
-    * 64-double query vector does NOT ride the explode (the r14 shape's
-    * |Q|·nprobe·520 B probe frame is what AQE mis-broadcast at sf100,
-    * killing the query; with a 64-wide salt it would be gigabytes).
-    * Query vectors and their hoisted norms attach to candidates by a
-    * broadcast hash join on q_id at scoring time — |Q| rows once, the
-    * bruteTopkFrom broadcast discipline, bounded by the 8 GB/512M-row
-    * broadcast rail (|Q| ≈ n/37 ⇒ fine past 10⁸ vectors; beyond that a
-    * deployment slices the query table into independent jobs, guide
-    * §2.6). The corpus side exchanges once on (cell, salt), which also
-    * restores scan-width parallelism when the probe side broadcasts
-    * (the staged compact-file layout coalesces to a handful of splits)
-    * and materializes the assignment kernels once instead of
-    * re-evaluating them in the join's filter and project. */
   /** Target candidate rows per scoring task: ~1.5M (q_id, n_id, cos)
     * rows ≈ 60 MB of sort state — 32 concurrent tasks stay well inside
     * an 8 GB heap where the session default (bytes-derived from INPUT
@@ -806,6 +767,33 @@ object Ann {
       math.max(session.toLong, pairsUB / BatchPairsPerTask)).toInt
   }
 
+  /** The scoring tail shared by the in-query batch search and its staged
+    * twin: explode each query's nprobe cells, cell-keyed join against
+    * the celled corpus, exact cosine, per-query top-K.
+    *
+    * - Probe rows are metadata only: the probe frame shuffles
+    *   (q_id, cell, salt), and the 64-double query vector does not ride
+    *   the explode. Carried along, the |Q|·nprobe·520 B frame is large
+    *   enough to kill the query when broadcast at sf100, and gigabytes
+    *   once salted 64 wide. Query vectors and their norms attach to the
+    *   candidates by a broadcast hash join on q_id at scoring time: |Q|
+    *   rows once (the bruteTopkFrom discipline), inside the 8 GB /
+    *   512M-row broadcast rail while |Q| ≈ n/37 stays under ~10⁸
+    *   vectors; past that a deployment slices the query table into
+    *   independent jobs.
+    * - The probe side repartitions on `cell` (with the salt) BEFORE the
+    *   join, so AQE sizes it from the exchange's real bytes rather than
+    *   a scan estimate: at gate scale it still broadcasts (a few hundred
+    *   KB), past the threshold it becomes the cell-keyed shuffle join,
+    *   never a data-scaled broadcast.
+    * - The corpus side exchanges once on (cell, salt), which restores
+    *   scan-width parallelism when the probe side broadcasts (the staged
+    *   compact-file layout coalesces to a handful of splits) and
+    *   evaluates the assignment kernels once instead of in the join's
+    *   filter and project.
+    * - Norms are hoisted: nq once per query before the explode, nv once
+    *   per corpus row; the per-pair score dot/(nq·nv) is the identical
+    *   IEEE expression tree, bit for bit. */
   private def ivfBatchTail(celled: DataFrame, queries: DataFrame,
       topCellsCol: Column => Column): DataFrame = {
     val width = batchWidth(celled, queries.count())
@@ -827,8 +815,6 @@ object Ann {
         (Vectors.dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cos")))
   }
 
-  // -------------------------------------------------------------- vec_stats
-  /** Per-label vector statistics in exact integer micro-units. */
   // ------------------------------------------------------------ ann_pq_topk
   private val PqM = 8   // subspaces (64-dim → 8 dims per subspace)
   private val PqKs = 16 // sub-centroids per subspace → 4-bit codes
@@ -2210,7 +2196,7 @@ object Ann {
               }
             }.toArray
           }
-        def cents(sub: Array[Array[Array[Double]]]) = (for {
+        def centroidsDf(sub: Array[Array[Array[Double]]]) = (for {
           ci <- sub.indices; si <- sub(ci).indices
         } yield ((ci * maxSub + si), sub(ci)(si).toSeq)).toDF("cell", "cu")
         val caCol = expr(s"CAST(cell DIV $maxSub AS INT)")
@@ -2218,8 +2204,8 @@ object Ann {
           (caCol * maxSub +
             kcol(NearestSubCell(kexp(col("v")), kexp(caCol), refined2))).as("cell2"))
         assigned
-          .join(broadcast(cents(idx.refinedSub)), Seq("cell"))
-          .join(broadcast(cents(refined2).withColumnRenamed("cell", "cell2")
+          .join(broadcast(centroidsDf(idx.refinedSub)), Seq("cell"))
+          .join(broadcast(centroidsDf(refined2).withColumnRenamed("cell", "cell2")
             .withColumnRenamed("cu", "cu2")), Seq("cell2"))
           .select(expr(s"CAST(cell DIV $maxSub AS BIGINT)").as("ca"),
             col("cell"), col("cell2"),

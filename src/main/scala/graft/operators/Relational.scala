@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.Financial.{cents, dollars}
 import graft.sources.Tables
 
 /** Relational / OLAP query surface (SURVEY.md §2B).
@@ -19,9 +20,6 @@ import graft.sources.Tables
   */
 object Relational {
 
-  /** Exact money arithmetic: 2-decimal dollars-as-double → integer cents. */
-  private[operators] def cents(c: Column): Column = round(c * lit(100)).cast("long")
-
   /** Exact revenue in cents×basis-points: price_cents * (10000 - disc_bp).
     * ~1e10-1e11 per row — a Long SUM would overflow around 1e7 rows/group
     * at 100 TB (ANSI error in Spark 4, silent HUGEINT promotion in
@@ -33,8 +31,6 @@ object Relational {
   /** Exact overflow-safe sum of revUnits → dollars as double. */
   private[operators] def sumRevDollars(price: Column, disc: Column): Column =
     (sum(revUnits(price, disc).cast("decimal(38,0)")).cast("double") / 1000000.0)
-
-  private[operators] def dollars(sumCents: Column): Column = sumCents.cast("double") / 100.0
 
   // ---------------------------------------------------------------- q1_agg
   /** TPC-H Q1 shape: scan-heavy grouped aggregation on lineitem.

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
-import Relational.{cents, revUnits, dollars}
+import graft.functions.Financial.{cents, dollars}
+import Relational.revUnits
 
 /** The remaining TPC-H query shapes (SURVEY.md §2B), adapted to the test
   * schema where the stock formulation needs a column this star lacks

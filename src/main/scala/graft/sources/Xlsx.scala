@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.io.ByteArrayInputStream
+import java.nio.charset.StandardCharsets
 import java.util.zip.ZipInputStream
 import javax.xml.parsers.{DocumentBuilderFactory, SAXParserFactory}
 import org.xml.sax.Attributes
@@ -77,19 +78,29 @@ object XlsxParse {
       }
   }
 
-  private def entries(bytes: Array[Byte]): Map[String, Array[Byte]] = {
+  /** Every entry of a workbook zip (name, bytes), in archive order. */
+  private[sources] def zipEntries(bytes: Array[Byte]): Seq[(String, Array[Byte])] = {
     val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
-    val m = mutable.Map.empty[String, Array[Byte]]
+    val out = mutable.Buffer.empty[(String, Array[Byte])]
     var e = zin.getNextEntry
     while (e != null) {
-      val n = e.getName
-      if (n == "xl/workbook.xml" || n == "xl/_rels/workbook.xml.rels" ||
-          n == "xl/sharedStrings.xml" || n.startsWith("xl/worksheets/sheet"))
-        m(n) = zin.readAllBytes()
+      out += e.getName -> zin.readAllBytes()
       zin.closeEntry(); e = zin.getNextEntry
     }
-    m.toMap
+    out.toSeq
   }
+
+  private def entries(bytes: Array[Byte]): Map[String, Array[Byte]] =
+    zipEntries(bytes).filter { case (n, _) =>
+      n == "xl/workbook.xml" || n == "xl/_rels/workbook.xml.rels" ||
+        n == "xl/sharedStrings.xml" || n.startsWith("xl/worksheets/sheet")
+    }.toMap
+
+  /** A workbook relationship target as its zip entry name: Excel writes
+    * absolute targets (`/xl/worksheets/sheet1.xml`), other writers ones
+    * relative to `xl/` (`worksheets/sheet1.xml`). */
+  private[sources] def partPath(target: String): String =
+    "xl/" + target.stripPrefix("/").stripPrefix("xl/")
 
   /** XXE hardening (OWASP XXE-prevention): a workbook is untrusted input,
     * and a DOCTYPE in any XML part could otherwise pull external entities
@@ -129,7 +140,7 @@ object XlsxParse {
       val ns = dom(b).getElementsByTagName("Relationship")
       (0 until ns.getLength).map { i =>
         val e = ns.item(i).asInstanceOf[org.w3c.dom.Element]
-        e.getAttribute("Id") -> e.getAttribute("Target").stripPrefix("/xl/").stripPrefix("xl/")
+        e.getAttribute("Id") -> partPath(e.getAttribute("Target"))
       }.toMap
     }.getOrElse(Map.empty)
 
@@ -145,8 +156,7 @@ object XlsxParse {
     val saxf = SAXParserFactory.newInstance()
     saxf.setNamespaceAware(false)
     harden(saxf.setFeature)
-    for ((name, rid) <- sheets; target <- rels.get(rid);
-         part <- parts.get("xl/" + target)) {
+    for ((name, rid) <- sheets; target <- rels.get(rid); part <- parts.get(target)) {
       saxf.newSAXParser().parse(new ByteArrayInputStream(part),
         new SheetHandler(name, shared, out))
     }
@@ -197,7 +207,7 @@ object XlsxWrite {
     * (the reference's own grain) — parquet/orc stay the scale sinks. */
   def writeCells(path: String, sheets: Seq[(String, Seq[XlsxParse.Cell])]): Unit = {
     val overrides = sheets.indices.map(i =>
-      s"""<Override PartName="/xl/worksheets/sheet${i + 1}.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""").mkString
+      s"""<Override PartName="/xl/worksheets/sheet${i + 1}.xml" ContentType="$WorksheetType"/>""").mkString
     val contentTypes =
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
          |<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types"><Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/><Default Extension="xml" ContentType="application/xml"/><Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>$overrides</Types>""".stripMargin
@@ -212,24 +222,83 @@ object XlsxWrite {
     val wbRels =
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
          |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">${sheets.indices.map(i =>
-        s"""<Relationship Id="rId${i + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet${i + 1}.xml"/>""").mkString}</Relationships>""".stripMargin
+        s"""<Relationship Id="rId${i + 1}" Type="$WorksheetRel" Target="worksheets/sheet${i + 1}.xml"/>""").mkString}</Relationships>""".stripMargin
 
+    writeZip(path, Seq("[Content_Types].xml" -> contentTypes, "_rels/.rels" -> rootRels,
+      "xl/workbook.xml" -> workbook, "xl/_rels/workbook.xml.rels" -> wbRels).map(utf8) ++
+      sheets.zipWithIndex.map { case ((_, cells), i) =>
+        utf8(s"xl/worksheets/sheet${i + 1}.xml" -> sheetXml(cells)) })
+  }
+
+  private def utf8(e: (String, String)): (String, Array[Byte]) =
+    e._1 -> e._2.getBytes(StandardCharsets.UTF_8)
+
+  private def writeZip(path: String, entries: Seq[(String, Array[Byte])]): Unit = {
     val zout = new java.util.zip.ZipOutputStream(
       java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(path)))
-    try {
-      def put(name: String, content: String): Unit = {
-        zout.putNextEntry(new java.util.zip.ZipEntry(name))
-        zout.write(content.getBytes("UTF-8"))
-        zout.closeEntry()
-      }
-      put("[Content_Types].xml", contentTypes)
-      put("_rels/.rels", rootRels)
-      put("xl/workbook.xml", workbook)
-      put("xl/_rels/workbook.xml.rels", wbRels)
-      sheets.zipWithIndex.foreach { case ((_, cells), i) =>
-        put(s"xl/worksheets/sheet${i + 1}.xml", sheetXml(cells))
-      }
+    try entries.foreach { case (name, bytes) =>
+      zout.putNextEntry(new java.util.zip.ZipEntry(name))
+      zout.write(bytes)
+      zout.closeEntry()
     } finally zout.close()
+  }
+
+  private val WorksheetType =
+    "application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"
+  private val WorksheetRel =
+    "http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet"
+  private val SheetTag = """<sheet\b[^>]*/>""".r
+  private val RelTag = """<Relationship\b[^>]*/>""".r
+  private val OverrideTag = """<Override\b[^>]*/>""".r
+  private def attr(tag: String, name: String): String =
+    raw"""\s$name="([^"]*)"""".r.findFirstMatchIn(tag).map(_.group(1)).getOrElse("")
+
+  /** Copy the workbook `source` to `path` with the named `sheets` written
+    * as values-only parts at the end of the sheet list (replacing any
+    * sheet of the same name) and every other part copied byte for byte:
+    * kept sheets keep their formulas, styles and number formats, and
+    * `xl/styles.xml` / `xl/sharedStrings.xml` are untouched. Only the
+    * sheet list is patched (`workbook.xml`, its rels, `[Content_Types].xml`);
+    * the calculation chain is dropped (Excel rebuilds it) and the workbook
+    * asks for a full recalculation on load, so kept formulas over the
+    * replaced sheets show their new values. */
+  def replaceSheets(source: Array[Byte], path: String,
+                    sheets: Seq[(String, Seq[XlsxParse.Cell])]): Unit = {
+    val parts = XlsxParse.zipEntries(source)
+    def text(name: String) = new String(parts.find(_._1 == name).get._2, StandardCharsets.UTF_8)
+    val (workbook, rels, types) =
+      (text("xl/workbook.xml"), text("xl/_rels/workbook.xml.rels"), text("[Content_Types].xml"))
+    val sheetTags = SheetTag.findAllIn(workbook).toSeq
+    val relTags = RelTag.findAllIn(rels).toSeq
+    val goneSheets = sheetTags.filter(t => sheets.exists(s => esc(s._1) == attr(t, "name")))
+    val goneRels = relTags.filter(t => goneSheets.exists(attr(_, "r:id") == attr(t, "Id")) ||
+      attr(t, "Type").endsWith("/calcChain"))
+    val gone = goneRels.map(t => XlsxParse.partPath(attr(t, "Target"))).toSet
+    val kept = parts.filterNot(e => gone(e._1))
+    val partNames = Iterator.from(1).map(i => s"xl/worksheets/sheet$i.xml")
+      .filterNot(p => kept.exists(_._1 == p))
+    val relIds = Iterator.from(1).map(i => s"rId$i").filterNot(id => relTags.exists(attr(_, "Id") == id))
+    val sheetId0 = sheetTags.map(attr(_, "sheetId").toInt).maxOption.getOrElse(0)
+    val added = sheets.zipWithIndex.map { case ((name, cells), i) =>
+      (name, cells, partNames.next(), relIds.next(), sheetId0 + 1 + i) }
+    def patch(xml: String, drop: Seq[String], close: String, add: Seq[String]): String =
+      drop.foldLeft(xml)((x, t) => x.replace(t, "")).replace(close, add.mkString + close)
+    val wb = patch(workbook, goneSheets, "</sheets>", added.map { case (n, _, _, rid, id) =>
+      s"""<sheet name="${esc(n)}" sheetId="$id" r:id="$rid"/>""" })
+    val patched = Map(
+      "xl/workbook.xml" ->
+        (if (wb.contains("fullCalcOnLoad")) wb
+         else wb.replaceFirst("<calcPr\\b", "<calcPr fullCalcOnLoad=\"1\"")),
+      "xl/_rels/workbook.xml.rels" -> patch(rels, goneRels, "</Relationships>",
+        added.map { case (_, _, p, rid, _) =>
+          s"""<Relationship Id="$rid" Type="$WorksheetRel" Target="/$p"/>""" }),
+      "[Content_Types].xml" -> patch(types,
+        OverrideTag.findAllIn(types).filter(t => gone(attr(t, "PartName").stripPrefix("/"))).toSeq,
+        "</Types>", added.map { case (_, _, p, _, _) =>
+          s"""<Override PartName="/$p" ContentType="$WorksheetType"/>""" }))
+    writeZip(path,
+      kept.map { case (n, b) => patched.get(n).map(x => utf8(n -> x)).getOrElse(n -> b) } ++
+        added.map { case (_, cells, p, _, _) => utf8(p -> sheetXml(cells)) })
   }
 
   /** DataFrame → dense sheet grid, like pandas to_excel(index=False):
@@ -256,22 +325,17 @@ object Xlsx {
   /** The reference's write_back_to_warehouse (build_warehouse.py:172-181):
     * rewrite the warehouse workbook with the Final and Missing_GL_Mapping
     * sheets replaced by the given DataFrames (header row + values, as
-    * to_excel(index=False) lays them out) and every OTHER sheet preserved
-    * cell-for-cell, preserved sheets first — the reference's exact sheet
-    * order. Driver-side single-file I/O: the warehouse workbook is the
+    * to_excel(index=False) lays them out) and every OTHER sheet kept as
+    * it was, formulas, styles and number formats included, kept sheets
+    * first — the reference's exact sheet order. Driver-side single-file I/O: the warehouse workbook is the
     * reference user's report artifact, inherently one small file; the
     * scale-correct data sinks remain parquet/orc (SURVEY §2H). */
   def writeBack(warehousePath: String, outPath: String,
                 finalDf: org.apache.spark.sql.DataFrame,
-                missingDf: org.apache.spark.sql.DataFrame): Unit = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(warehousePath))
-    val all = XlsxParse.cells(bytes)
-    val keepOrder = all.map(_.sheet).distinct.filterNot(s => s == FinalSheet || s == QaSheet)
-    val preserved = keepOrder.map(s => s -> all.filter(_.sheet == s))
-    XlsxWrite.writeCells(outPath,
-      preserved ++ Seq(FinalSheet -> XlsxWrite.dfCells(finalDf),
-        QaSheet -> XlsxWrite.dfCells(missingDf)))
-  }
+                missingDf: org.apache.spark.sql.DataFrame): Unit =
+    XlsxWrite.replaceSheets(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(warehousePath)), outPath,
+      Seq(FinalSheet -> XlsxWrite.dfCells(finalDf), QaSheet -> XlsxWrite.dfCells(missingDf)))
 
   /** Every populated cell of every `.xlsx` under `path` (glob ok):
     * (file, sheet, row, col, value) — one parse task per workbook via

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.operators.UpsertDedupe
+import graft.warehouse.Warehouse
 
 /** Continuous warehouse ingestion — the reference's operating trigger
   * ("a monthly workbook lands in the folder": Code.gs:87-109 folder
@@ -33,12 +34,6 @@ import graft.operators.UpsertDedupe
   * materialized before the swap. */
 object WarehouseStream {
 
-  /** Natural key of the warehouse fact (Code.gs:264-274). */
-  val foldKeys: Seq[String] = Seq("gl_code", "year", "month", "department", "category")
-
-  /** Newest file wins, then later sheet row (the fin_multi_load order). */
-  private def precedence = Seq(col("batch").desc, col("pos").desc)
-
   /** Streaming source over an inbox directory of batch-stamped parquet
     * files (multiLoadBatches schema). maxFilesPerTrigger=1 makes each
     * arriving file its own micro-batch — the reference's one-workbook-
@@ -52,14 +47,18 @@ object WarehouseStream {
   def currentTable(spark: SparkSession, tableDir: String): Option[DataFrame] =
     if (Files.exists(Paths.get(tableDir))) Some(spark.read.parquet(tableDir)) else None
 
-  /** Merge one micro-batch into the stored table (keep-last fold), then
-    * commit via write-new + atomic rename swap. */
+  /** Merge one micro-batch into the stored table (keep-last fold on the
+    * warehouse's natural key and precedence), then commit via write-new +
+    * atomic rename swap. The stored table keeps `pos`/`batch` for the
+    * next merge, so this is `keepLast` itself, not
+    * `Warehouse.multiLoadFold`, which drops them. */
   def mergeIntoTable(spark: SparkSession, incoming: DataFrame, tableDir: String): Unit = {
+    val foldKeys = Warehouse.NaturalKey.map(col)
     val merged = currentTable(spark, tableDir) match {
       case Some(existing) =>
-        UpsertDedupe.keepLast(existing, incoming, foldKeys.map(col), precedence)
+        UpsertDedupe.keepLast(existing, incoming, foldKeys, Warehouse.Precedence)
       case None =>
-        UpsertDedupe.keepLastWithin(incoming, foldKeys.map(col), precedence)
+        UpsertDedupe.keepLastWithin(incoming, foldKeys, Warehouse.Precedence)
     }
     replaceTable(merged, tableDir)
   }

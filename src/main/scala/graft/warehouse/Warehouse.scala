@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.GraftColumnBridge.stageBarrier
 import graft.functions.Financial
+import graft.functions.Financial.{cents, dollars}
 import graft.operators.{ForwardFill, UpsertDedupe}
 import graft.sources.Tables
 
@@ -29,8 +30,24 @@ object Warehouse {
 
   private val PB = Statements.POS_BUCKET
 
-  private def dollars(c: Column): Column = c.cast("double") / 100.0
-  private def cents(c: Column): Column = round(c * 100).cast("long")
+  /** The natural key of the warehouse fact (build_warehouse.py:159-169,
+    * Code.gs:264-274): one row per (GL code, Year, Month, Department,
+    * Category) after a load. */
+  val NaturalKey: Seq[String] = Seq("gl_code", "year", "month", "department", "category")
+
+  /** Keep-last precedence on the natural key: the later batch wins, and
+    * within a batch the later sheet row. */
+  val Precedence: Seq[Column] = Seq(col("batch").desc, col("pos").desc)
+
+  /** The (department, GL, year, month) grain of the monthly reports. */
+  private[graft] val DeptGlMonth: Seq[Column] =
+    Seq(col("department"), col("gl_code"), col("year"), col("month"))
+
+  /** The exact-cents rollup every report over the fact starts from:
+    * sum(cents(amount)) as `out` per `keys`, grouped in the given key
+    * order (the order is the exchange's hash key). */
+  private[graft] def rollupCents(df: DataFrame, keys: Seq[Column], out: String = "tc"): DataFrame =
+    df.groupBy(keys: _*).agg(sum(cents(col("amount"))).as(out))
 
   // ------------------------------------------------------------- pipeline
 
@@ -106,29 +123,29 @@ object Warehouse {
     * production the parsed fact would be a staged table and `existing`
     * the warehouse's own (Year, Month) partitions. */
   def upserted(spark: SparkSession, dir: String): DataFrame = {
-    def variant(batch: Int, year: Column, amount: Column) =
-      struct(col("gl_code"), col("category"), year.as("year"), col("month"),
-        col("department"), amount.as("amount"), col("pos"), lit(batch).as("batch"))
     val k = col("pos") % PB
-    val variants = filter(array(
-      variant(1, col("year"), col("amount")),
-      when(k % 3 === 0, variant(0, col("year") - 10, col("amount"))),
-      when(k % 5 === 0, variant(0, col("year"), col("amount") + 100.0))),
-      v => v.isNotNull)
-    UpsertDedupe.keepLastWithin(
-      fact(spark, dir).select(explode(variants).as("v")).select(col("v.*")),
-      Seq(col("gl_code"), col("year"), col("month"), col("department"), col("category")),
-      Seq(col("batch").desc, col("pos").desc))
-      .drop("pos", "batch")
+    multiLoadFold(stamped(fact(spark, dir),
+      stamp(col("year"), col("amount"), lit(1)),
+      when(k % 3 === 0, stamp(col("year") - 10, col("amount"), lit(0))),
+      when(k % 5 === 0, stamp(col("year"), col("amount") + 100.0, lit(0)))))
   }
+
+  /** A fact row as one load row: the natural key, amount, sheet position
+    * and load batch, the keep-last fold's input shape. */
+  private def stamp(year: Column, amount: Column, batch: Column): Column =
+    struct(col("gl_code"), col("category"), year.as("year"), col("month"),
+      col("department"), amount.as("amount"), col("pos"), batch.as("batch"))
+
+  /** Each fact row exploded into its non-null stamped load rows. */
+  private def stamped(fact: DataFrame, loads: Column*): DataFrame =
+    fact.select(explode(filter(array(loads: _*), v => v.isNotNull)).as("v"))
+      .select(col("v.*"))
 
   // ------------------------------------------------------ shared SQL CTEs
 
-  /** Shared with operators that derive from the statement fact
-    * (e.g. Analytics.finSparseFill). */
-  def factCtesPublic: String = factCtes
-
-  private val factCtes: String =
+  /** The statement fact as SQL (`fin_cat`, `fin_fact`); shared with
+    * operators that derive from it (Analytics.finSparseFill). */
+  private[graft] val factCtes: String =
     s"""${Statements.incomeCtes},
        |fin_cat AS (
        |  SELECT *, last_value(CASE WHEN upper(trim(label)) = 'REVENUES' THEN 'Revenue'
@@ -160,9 +177,34 @@ object Warehouse {
        |  SELECT gl_code, category, year, month, department, amount, pos, 1 FROM fin_fact),
        |fin_upserted AS (
        |  SELECT gl_code, category, year, month, department, amount FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY gl_code, year, month, department, category
-       |                                 ORDER BY batch DESC, pos DESC) AS rn
+       |    $keepLastRn
        |    FROM fin_unioned) t WHERE rn = 1)""".stripMargin
+
+  /** The keep-last fold in SQL: rank 1 per natural key is the survivor. */
+  private def keepLastRn: String =
+    s"""SELECT *, row_number() OVER (PARTITION BY ${NaturalKey.mkString(", ")}
+       |                                 ORDER BY batch DESC, pos DESC) AS rn""".stripMargin
+
+  /** The monthly (department, GL) cents rollup of the upserted fact. */
+  private val monthlyCtes: String =
+    s"""$upsertCtes,
+       |fin_monthly AS (
+       |  SELECT department, gl_code, year, month,
+       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
+       |  FROM fin_upserted GROUP BY department, gl_code, year, month)""".stripMargin
+
+  /** Monthly Revenue per department (`rv`), its calendar-month rollup
+    * (`bm`) and department totals (`bd`): the seasonality base. */
+  private val seasonCtes: String =
+    s"""$upsertCtes,
+       |rv AS (SELECT department, year, month,
+       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
+       |       FROM fin_upserted WHERE category = 'Revenue'
+       |       GROUP BY department, year, month),
+       |bm AS (SELECT department, month, sum(tc) AS s_m, count(*) AS n_m
+       |       FROM rv GROUP BY department, month),
+       |bd AS (SELECT department, sum(s_m) AS s_d, sum(n_m) AS n_d
+       |       FROM bm GROUP BY department)""".stripMargin
 
   // -------------------------------------------------------------- queries
 
@@ -248,9 +290,9 @@ object Warehouse {
     * aggregated to the QA natural key. */
   def finMissingQa(spark: SparkSession, dir: String): DataFrame =
     enriched(spark, dir).filter(col("gl_missing"))
-      .groupBy(col("gl_code"), col("year"), col("month"), col("department"), col("category"))
+      .groupBy(NaturalKey.map(col): _*)
       .agg(dollars(sum(cents(col("amount")))).as("total_amount"), count(lit(1)).as("n"))
-      .orderBy(col("gl_code"), col("year"), col("month"), col("department"), col("category"))
+      .orderBy(NaturalKey.map(col): _*)
 
   val finMissingQaSql: String =
     s"""WITH $factCtes, ${Statements.glRefCtes}
@@ -330,23 +372,25 @@ object Warehouse {
     * arrive as a later wave (period index + 100000), exactly as a
     * revised workbook re-enters the sorted list after the originals. */
   def multiLoadBatches(spark: SparkSession, dir: String): DataFrame = {
-    val f = fact(spark, dir)
     val periodBatch = (col("year") * 12 + col("month")).cast("long")
     val k = col("pos") % PB
-    def v(amount: Column, batch: Column) =
-      struct(col("gl_code"), col("category"), col("year"), col("month"),
-        col("department"), amount.as("amount"), col("pos"), batch.as("batch"))
-    val variants = filter(array(
-      v(col("amount"), periodBatch),
-      when(k % 23 === 0, v(col("amount") + 50.0, periodBatch + 100000L))),
-      x => x.isNotNull)
-    f.select(explode(variants).as("v")).select(col("v.*"))
+    stamped(fact(spark, dir),
+      stamp(col("year"), col("amount"), periodBatch),
+      when(k % 23 === 0, stamp(col("year"), col("amount") + 50.0, periodBatch + 100000L)))
   }
 
-  /** Fold a batch-stamped frame into the warehouse: later batch wins per
-    * natural key, later sheet row wins within a batch. ONE shuffle total
-    * regardless of file count — the whole point of re-expressing the
-    * loop (order-insensitivity + idempotence proven in MultiLoadSpec). */
+  /** multiLoadBatches in SQL. */
+  private val mlBatchesCtes: String =
+    s"""$factCtes,
+       |ml_batches AS (
+       |  SELECT gl_code, category, year, month, department, amount, pos,
+       |         CAST(year*12 + month AS BIGINT) AS batch
+       |  FROM fin_fact
+       |  UNION ALL
+       |  SELECT gl_code, category, year, month, department, amount + 50.0, pos,
+       |         CAST(year*12 + month + 100000 AS BIGINT)
+       |  FROM fin_fact WHERE (pos % $PB) % 23 = 0)""".stripMargin
+
   /** The reference's OTHER operating mode: the single-newest-file
     * trigger (build_warehouse.py:193-203 picks the most-recent mm.yyyy
     * workbook by mtime; Code.gs:87-109 sorts the folder so a revised
@@ -361,10 +405,12 @@ object Warehouse {
     batches.join(broadcast(mx), col("batch") === col("mx_batch")).drop("mx_batch")
   }
 
+  /** Fold a batch-stamped frame into the warehouse: later batch wins per
+    * natural key, later sheet row wins within a batch. ONE shuffle total
+    * regardless of file count — the whole point of re-expressing the
+    * loop (order-insensitivity + idempotence proven in MultiLoadSpec). */
   def multiLoadFold(batches: DataFrame): DataFrame =
-    UpsertDedupe.keepLastWithin(batches,
-      Seq(col("gl_code"), col("year"), col("month"), col("department"), col("category")),
-      Seq(col("batch").desc, col("pos").desc))
+    UpsertDedupe.keepLastWithin(batches, NaturalKey.map(col), Precedence)
       .drop("pos", "batch")
 
   /** fin_multi_load: the reference's operating loop (Code.gs:87-109 —
@@ -380,19 +426,10 @@ object Warehouse {
       .orderBy(col("year"), col("month"), col("department"), col("category"), col("gl_code"))
 
   val finMultiLoadSql: String =
-    s"""WITH $factCtes,
-       |ml_batches AS (
-       |  SELECT gl_code, category, year, month, department, amount, pos,
-       |         CAST(year*12 + month AS BIGINT) AS batch
-       |  FROM fin_fact
-       |  UNION ALL
-       |  SELECT gl_code, category, year, month, department, amount + 50.0, pos,
-       |         CAST(year*12 + month + 100000 AS BIGINT)
-       |  FROM fin_fact WHERE (pos % $PB) % 23 = 0),
+    s"""WITH $mlBatchesCtes,
        |ml_final AS (
        |  SELECT gl_code, category, year, month, department, amount FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY gl_code, year, month, department, category
-       |                                 ORDER BY batch DESC, pos DESC) AS rn
+       |    $keepLastRn
        |    FROM ml_batches) t WHERE rn = 1)
        |SELECT gl_code, category, year, month, department, amount FROM ml_final
        |ORDER BY year, month, department, category, gl_code""".stripMargin
@@ -412,22 +449,13 @@ object Warehouse {
       .orderBy(col("year"), col("month"), col("department"), col("category"), col("gl_code"))
 
   val finLatestLoadSql: String =
-    s"""WITH $factCtes,
-       |ml_batches AS (
-       |  SELECT gl_code, category, year, month, department, amount, pos,
-       |         CAST(year*12 + month AS BIGINT) AS batch
-       |  FROM fin_fact
-       |  UNION ALL
-       |  SELECT gl_code, category, year, month, department, amount + 50.0, pos,
-       |         CAST(year*12 + month + 100000 AS BIGINT)
-       |  FROM fin_fact WHERE (pos % $PB) % 23 = 0),
+    s"""WITH $mlBatchesCtes,
        |ml_latest AS (
        |  SELECT * FROM ml_batches
        |  WHERE batch = (SELECT max(batch) FROM ml_batches)),
        |ml_final AS (
        |  SELECT gl_code, category, year, month, department, amount FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY gl_code, year, month, department, category
-       |                                 ORDER BY batch DESC, pos DESC) AS rn
+       |    $keepLastRn
        |    FROM ml_latest) t WHERE rn = 1)
        |SELECT gl_code, category, year, month, department, amount FROM ml_final
        |ORDER BY year, month, department, category, gl_code""".stripMargin
@@ -444,22 +472,21 @@ object Warehouse {
     * derivation); the two folds and the diff all shuffle on the same
     * natural key. Output is bounded by the newest batch's row count. */
   def finLoadDiff(spark: SparkSession, dir: String): DataFrame = {
-    val keys = Seq("gl_code", "year", "month", "department", "category")
     val batches = stageBarrier(multiLoadBatches(spark, dir))
     val mx = batches.agg(max(col("batch")).as("mx_batch"))
     val beforeF = multiLoadFold(
       batches.crossJoin(broadcast(mx)).filter(col("batch") < col("mx_batch")).drop("mx_batch"))
     val afterF = multiLoadFold(batches)
-    val b = beforeF.select(keys.map(col) :+ cents(col("amount")).as("before_cents"): _*)
-    val a = afterF.select(keys.map(col) :+ cents(col("amount")).as("after_cents"): _*)
-    b.join(a, keys, "full_outer")
+    val b = beforeF.select(NaturalKey.map(col) :+ cents(col("amount")).as("before_cents"): _*)
+    val a = afterF.select(NaturalKey.map(col) :+ cents(col("amount")).as("after_cents"): _*)
+    b.join(a, NaturalKey, "full_outer")
       .withColumn("status",
         when(col("before_cents").isNull, "added")
           .when(col("after_cents").isNull, "removed")
           .when(col("before_cents") =!= col("after_cents"), "changed")
           .otherwise("unchanged"))
       .filter(col("status") =!= "unchanged")
-      .select(keys.map(col) ++ Seq(
+      .select(NaturalKey.map(col) ++ Seq(
         dollars(col("before_cents")).as("before_amount"),
         dollars(col("after_cents")).as("after_amount"),
         dollars(col("after_cents") - col("before_cents")).as("delta"),
@@ -468,27 +495,17 @@ object Warehouse {
   }
 
   val finLoadDiffSql: String =
-    s"""WITH $factCtes,
-       |ml_batches AS (
-       |  SELECT gl_code, category, year, month, department, amount, pos,
-       |         CAST(year*12 + month AS BIGINT) AS batch
-       |  FROM fin_fact
-       |  UNION ALL
-       |  SELECT gl_code, category, year, month, department, amount + 50.0, pos,
-       |         CAST(year*12 + month + 100000 AS BIGINT)
-       |  FROM fin_fact WHERE (pos % $PB) % 23 = 0),
+    s"""WITH $mlBatchesCtes,
        |before_f AS (
        |  SELECT gl_code, category, year, month, department,
        |         CAST(round(amount*100) AS BIGINT) AS before_cents FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY gl_code, year, month, department, category
-       |                                 ORDER BY batch DESC, pos DESC) AS rn
+       |    $keepLastRn
        |    FROM ml_batches WHERE batch < (SELECT max(batch) FROM ml_batches)) t
        |  WHERE rn = 1),
        |after_f AS (
        |  SELECT gl_code, category, year, month, department,
        |         CAST(round(amount*100) AS BIGINT) AS after_cents FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY gl_code, year, month, department, category
-       |                                 ORDER BY batch DESC, pos DESC) AS rn
+       |    $keepLastRn
        |    FROM ml_batches) t
        |  WHERE rn = 1),
        |d AS (
@@ -555,9 +572,7 @@ object Warehouse {
     finTrendMomFrom(stagedUpserted(spark, dir))
 
   private def finTrendMomFrom(up: DataFrame): DataFrame = {
-    val monthly = up
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val monthly = rollupCents(up, DeptGlMonth)
     val w = Window.partitionBy(col("department"), col("gl_code"))
       .orderBy(col("year"), col("month"))
     monthly
@@ -570,11 +585,7 @@ object Warehouse {
   }
 
   val finTrendMomSql: String =
-    s"""WITH $upsertCtes,
-       |fin_monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM fin_upserted GROUP BY department, gl_code, year, month)
+    s"""WITH $monthlyCtes
        |SELECT department, gl_code, year, month,
        |       CAST(tc AS DOUBLE)/100.0 AS total,
        |       CAST(lag(tc) OVER w AS DOUBLE)/100.0 AS prev_total,
@@ -609,11 +620,8 @@ object Warehouse {
     finCommonSizeFrom(stagedUpserted(spark, dir))
 
   private def finCommonSizeFrom(up: DataFrame): DataFrame = {
-    val monthly = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
-      up
-        .groupBy(col("department"), col("gl_code"), col("category"),
-          col("year"), col("month"))
-        .agg(sum(cents(col("amount"))).as("tc")))
+    val monthly = stageBarrier(rollupCents(up,
+      Seq(col("department"), col("gl_code"), col("category"), col("year"), col("month"))))
     val rev = monthly.filter(col("category") === "Revenue")
       .groupBy(col("department"), col("year"), col("month"))
       .agg(sum(col("tc")).as("rev_tc"))
@@ -660,9 +668,8 @@ object Warehouse {
     * ratio of averages without ever forming a float average — NULL
     * where a department's revenue nets to zero. */
   def finSeasonality(spark: SparkSession, dir: String): DataFrame = {
-    val monthly = upserted(spark, dir).filter(col("category") === "Revenue")
-      .groupBy(col("department"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val monthly = rollupCents(upserted(spark, dir).filter(col("category") === "Revenue"),
+      Seq(col("department"), col("year"), col("month")))
     val bym = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
       monthly.groupBy(col("department"), col("month"))
         .agg(sum(col("tc")).as("s_m"), count(lit(1)).as("n_m")))
@@ -681,15 +688,7 @@ object Warehouse {
   }
 
   val finSeasonalitySql: String =
-    s"""WITH $upsertCtes,
-       |rv AS (SELECT department, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |       FROM fin_upserted WHERE category = 'Revenue'
-       |       GROUP BY department, year, month),
-       |bm AS (SELECT department, month, sum(tc) AS s_m, count(*) AS n_m
-       |       FROM rv GROUP BY department, month),
-       |bd AS (SELECT department, sum(s_m) AS s_d, sum(n_m) AS n_d
-       |       FROM bm GROUP BY department)
+    s"""WITH $seasonCtes
        |SELECT bm.department, bm.month, CAST(bm.n_m AS BIGINT) AS n_obs,
        |       round(CAST(bm.s_m AS DOUBLE) / CAST(bm.n_m * 100 AS DOUBLE), 2) + 0.0 AS avg_amount,
        |       CASE WHEN bd.s_d = 0 THEN NULL
@@ -725,9 +724,8 @@ object Warehouse {
     finDeseasonalizedFrom(upserted(spark, dir))
 
   private[graft] def finDeseasonalizedFrom(up: DataFrame): DataFrame = {
-    val monthly = stageBarrier(up.filter(col("category") === "Revenue")
-      .groupBy(col("department"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc")))
+    val monthly = stageBarrier(rollupCents(up.filter(col("category") === "Revenue"),
+      Seq(col("department"), col("year"), col("month"))))
     val bym = stageBarrier(monthly.groupBy(col("department"), col("month"))
       .agg(sum(col("tc")).as("s_m"), count(lit(1)).as("n_m")))
     val byd = bym.groupBy(col("department"))
@@ -753,15 +751,7 @@ object Warehouse {
   }
 
   val finDeseasonalizedSql: String =
-    s"""WITH $upsertCtes,
-       |rv AS (SELECT department, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |       FROM fin_upserted WHERE category = 'Revenue'
-       |       GROUP BY department, year, month),
-       |bm AS (SELECT department, month, sum(tc) AS s_m, count(*) AS n_m
-       |       FROM rv GROUP BY department, month),
-       |bd AS (SELECT department, sum(s_m) AS s_d, sum(n_m) AS n_d
-       |       FROM bm GROUP BY department),
+    s"""WITH $seasonCtes,
        |j AS (
        |  SELECT rv.department, rv.year, rv.month, rv.tc,
        |         bm.s_m, bm.n_m, bd.s_d, bd.n_d,
@@ -795,9 +785,7 @@ object Warehouse {
     * (order-independent), the share one IEEE division of exact
     * integers, NULL when the department's month nets to zero. */
   def finVarianceWalk(spark: SparkSession, dir: String): DataFrame = {
-    val monthly = upserted(spark, dir)
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val monthly = rollupCents(upserted(spark, dir), DeptGlMonth)
     val wLag = Window.partitionBy(col("department"), col("gl_code"))
       .orderBy(col("year"), col("month"))
     val wMonth = Window.partitionBy(col("department"), col("year"), col("month"))
@@ -814,11 +802,7 @@ object Warehouse {
   }
 
   val finVarianceWalkSql: String =
-    s"""WITH $upsertCtes,
-       |fin_monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM fin_upserted GROUP BY department, gl_code, year, month),
+    s"""WITH $monthlyCtes,
        |d AS (SELECT *, tc - lag(tc) OVER (PARTITION BY department, gl_code
        |                                   ORDER BY year, month) AS dc
        |      FROM fin_monthly),
@@ -847,9 +831,8 @@ object Warehouse {
     finYoyTrendFrom(upserted(spark, dir))
 
   private def finYoyTrendFrom(up: DataFrame): DataFrame = {
-    val monthly = up
-      .groupBy(col("department"), col("gl_code"), col("month"), col("year"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val monthly = rollupCents(up,
+      Seq(col("department"), col("gl_code"), col("month"), col("year")))
     val w = Window.partitionBy(col("department"), col("gl_code"), col("month"))
       .orderBy(col("year"))
     monthly
@@ -881,10 +864,8 @@ object Warehouse {
     finQoqTrendFrom(upserted(spark, dir))
 
   private def finQoqTrendFrom(up: DataFrame): DataFrame = {
-    val quarterly = up
-      .groupBy(col("department"), col("gl_code"), col("year"),
-        (((col("month") - 1) / lit(3)).cast("int") + 1).as("quarter"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val quarterly = rollupCents(up, Seq(col("department"), col("gl_code"), col("year"),
+      (((col("month") - 1) / lit(3)).cast("int") + 1).as("quarter")))
     val qidx = col("year") * 4 + col("quarter")
     val w = Window.partitionBy(col("department"), col("gl_code"))
       .orderBy(col("year"), col("quarter"))
@@ -966,9 +947,7 @@ object Warehouse {
     finForecastLinearFrom(upserted(spark, dir))
 
   private[graft] def finForecastLinearFrom(up: DataFrame): DataFrame = {
-    val monthly = up
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val monthly = rollupCents(up, DeptGlMonth)
       .withColumn("m_idx", col("year") * 12 + col("month") - 1)
     val wg = Window.partitionBy(col("department"), col("gl_code"))
     val fitted = monthly
@@ -1038,9 +1017,8 @@ object Warehouse {
     finYtdFrom(stagedUpserted(spark, dir))
 
   private def finYtdFrom(up: DataFrame): DataFrame = {
-    val monthly = up
-      .groupBy(col("department"), col("category"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("mc"))
+    val monthly = rollupCents(up,
+      Seq(col("department"), col("category"), col("year"), col("month")), "mc")
     val w = Window.partitionBy(col("department"), col("category"), col("year"))
       .orderBy(col("month")).rowsBetween(Window.unboundedPreceding, 0)
     monthly
@@ -1078,9 +1056,7 @@ object Warehouse {
     finRolling3mFrom(upserted(spark, dir))
 
   private[graft] def finRolling3mFrom(up: DataFrame): DataFrame = {
-    val monthly = up
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val monthly = rollupCents(up, DeptGlMonth)
     val w = Window.partitionBy(col("department"), col("gl_code"))
       .orderBy(col("year"), col("month")).rowsBetween(-2, 0)
     monthly
@@ -1094,11 +1070,7 @@ object Warehouse {
   }
 
   val finRolling3mSql: String =
-    s"""WITH $upsertCtes,
-       |fin_monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM fin_upserted GROUP BY department, gl_code, year, month),
+    s"""WITH $monthlyCtes,
        |fin_roll AS (
        |  SELECT *, sum(tc) OVER w AS rc, count(*) OVER w AS rn
        |  FROM fin_monthly
@@ -1137,9 +1109,7 @@ object Warehouse {
     // monthly feeds BOTH the stats build and the join probe; staged once
     // so the statements derivation under `up` doesn't run twice (the
     // fin_latest_load / r5 fin_qa_status double-derive, same cure)
-    val monthly = stageBarrier(up
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc")))
+    val monthly = stageBarrier(rollupCents(up, DeptGlMonth))
     val d = (c: Column) => c.cast("decimal(38,0)")
     val stats = monthly.groupBy(col("department"), col("gl_code"))
       .agg(count(lit(1)).as("n"), sum(col("tc")).as("s"),
@@ -1156,11 +1126,7 @@ object Warehouse {
   }
 
   val finAnomalyZscoreSql: String =
-    s"""WITH $upsertCtes,
-       |fin_monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM fin_upserted GROUP BY department, gl_code, year, month),
+    s"""WITH $monthlyCtes,
        |fin_stats AS (
        |  SELECT department, gl_code, count(*) AS n, sum(tc) AS s,
        |         sum(CAST(tc AS HUGEINT) * CAST(tc AS HUGEINT)) AS q
@@ -1213,9 +1179,7 @@ object Warehouse {
     finAnomalyMadFrom(stagedUpserted(spark, dir))
 
   private[graft] def finAnomalyMadFrom(up: DataFrame): DataFrame = {
-    val monthly = up
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val monthly = rollupCents(up, DeptGlMonth)
     val wp = Window.partitionBy(col("department"), col("gl_code"))
     val w1 = wp.orderBy(col("tc"), col("year"), col("month"))
     def pick(rank: Column): Column =
@@ -1241,11 +1205,7 @@ object Warehouse {
   }
 
   val finAnomalyMadSql: String =
-    s"""WITH $upsertCtes,
-       |fin_monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM fin_upserted GROUP BY department, gl_code, year, month),
+    s"""WITH $monthlyCtes,
        |rk AS (
        |  SELECT *, count(*) OVER wp AS n,
        |         (count(*) OVER wp + 1) // 2 AS lo,
@@ -1313,9 +1273,7 @@ object Warehouse {
     finCusumFrom(stagedUpserted(spark, dir))
 
   private[graft] def finCusumFrom(up: DataFrame): DataFrame = {
-    val monthly = up
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val monthly = rollupCents(up, DeptGlMonth)
     val wp = Window.partitionBy(col("department"), col("gl_code"))
     val wo = wp.orderBy(col("year"), col("month"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -1342,11 +1300,7 @@ object Warehouse {
   }
 
   val finCusumSql: String =
-    s"""WITH $upsertCtes,
-       |fin_monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM fin_upserted GROUP BY department, gl_code, year, month),
+    s"""WITH $monthlyCtes,
        |cu_st AS (
        |  SELECT *, count(*) OVER wp AS n, sum(tc) OVER wp AS s
        |  FROM fin_monthly WINDOW wp AS (PARTITION BY department, gl_code)),
@@ -1405,33 +1359,38 @@ object Warehouse {
   def finEwma(spark: SparkSession, dir: String): DataFrame =
     finEwmaFrom(upserted(spark, dir))
 
-  private[graft] def finEwmaFrom(up: DataFrame): DataFrame = {
-    val monthly = up
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
-    val wOrd = Window.partitionBy(col("department"), col("gl_code"), col("year"))
-      .orderBy(col("month"))
-    val wRun = wOrd.rowsBetween(Window.unboundedPreceding, 0)
-    val d = (c: Column) => c.cast("decimal(38,0)")
-    val w2 = expr("CAST(shiftleft(1L, rn - 2) AS DECIMAL(38,0))")
-    monthly
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("wx",
-        when(col("rn") === 1, d(col("tc")))
-          .otherwise(d(col("tc")) * w2))
-      .withColumn("num", sum(col("wx")).over(wRun))
+  private[graft] def finEwmaFrom(up: DataFrame): DataFrame =
+    ewmaT1(up, "num")
       .select(col("department"), col("gl_code"), col("year"), col("month"),
         dollars(col("tc")).as("total"),
         (col("num").cast("double") / (lit(100.0) * pow(lit(2.0), col("rn") - 1)))
           .as("ewma"),
         col("rn").as("n_months"))
       .orderBy(col("department"), col("gl_code"), col("year"), col("month"))
+
+  /** Month order within (department, GL, year): the EWMA family
+    * restarts each year. */
+  private def ewmaOrder = Window.partitionBy(col("department"), col("gl_code"), col("year"))
+    .orderBy(col("month"))
+
+  /** The EWMA closed form's running sum over the monthly rollup, shared
+    * by fin_ewma and fin_forecast_brown: `rn` (month rank), `wx`
+    * (tc·2^(rn−2), tc at rn = 1) and `t1` = Σ wx, so s1 = T1 / 2^(rn−1). */
+  private def ewmaT1(up: DataFrame, t1: String): DataFrame = {
+    val d = (c: Column) => c.cast("decimal(38,0)")
+    val w2 = expr("CAST(shiftleft(1L, rn - 2) AS DECIMAL(38,0))")
+    rollupCents(up, DeptGlMonth)
+      .withColumn("rn", row_number().over(ewmaOrder))
+      .withColumn("wx",
+        when(col("rn") === 1, d(col("tc")))
+          .otherwise(d(col("tc")) * w2))
+      .withColumn(t1, sum(col("wx")).over(ewmaOrder.rowsBetween(Window.unboundedPreceding, 0)))
   }
 
   /** The yearly-restarted EWMA closed-form chain over an
-    * upserted-shaped source CTE — shared by finEwmaSql and
-    * fin_forecast_eval (drift rule). Ends at `${p}t` (tc, rn, num). */
-  private def ewmaTCtes(src: String, p: String): String =
+    * upserted-shaped source CTE — shared by finEwmaSql, the Brown chain
+    * and fin_forecast_eval (drift rule). Ends at `${p}t` (tc, rn, `t1`). */
+  private def ewmaTCtes(src: String, p: String, t1: String = "num"): String =
     s"""${p}monthly AS (
        |  SELECT department, gl_code, year, month,
        |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
@@ -1444,7 +1403,7 @@ object Warehouse {
        |  SELECT *, sum(CASE WHEN rn = 1 THEN tc
        |                     ELSE tc * CAST(pow(2, rn - 2) AS BIGINT) END)
        |            OVER (PARTITION BY department, gl_code, year ORDER BY rn
-       |                  ROWS UNBOUNDED PRECEDING) AS num
+       |                  ROWS UNBOUNDED PRECEDING) AS $t1
        |  FROM ${p}rn)""".stripMargin
 
   val finEwmaSql: String =
@@ -1494,23 +1453,11 @@ object Warehouse {
     finForecastBrownFrom(upserted(spark, dir))
 
   private[graft] def finForecastBrownFrom(up: DataFrame): DataFrame = {
-    val monthly = up
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
-    val wOrd = Window.partitionBy(col("department"), col("gl_code"), col("year"))
-      .orderBy(col("month"))
-    val wRun = wOrd.rowsBetween(Window.unboundedPreceding, 0)
-    val d = (c: Column) => c.cast("decimal(38,0)")
-    val w2 = expr("CAST(shiftleft(1L, rn - 2) AS DECIMAL(38,0))")
     val den = lit(100.0) * pow(lit(2.0), col("rn"))
-    monthly
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("wx",
-        when(col("rn") === 1, d(col("tc")))
-          .otherwise(d(col("tc")) * w2))
-      .withColumn("t1", sum(col("wx")).over(wRun))
+    ewmaT1(up, "t1")
       .withColumn("t1w", when(col("rn") === 1, col("t1") * lit(2)).otherwise(col("t1")))
-      .withColumn("t2", sum(col("t1w")).over(wRun))
+      .withColumn("t2",
+        sum(col("t1w")).over(ewmaOrder.rowsBetween(Window.unboundedPreceding, 0)))
       .select(col("department"), col("gl_code"), col("year"), col("month"),
         dollars(col("tc")).as("total"),
         ((col("t1") * lit(4) - col("t2")).cast("double") / den).as("level"),
@@ -1524,20 +1471,7 @@ object Warehouse {
     * source CTE — shared by finForecastBrownSql and fin_forecast_eval
     * (drift rule). Ends at `${p}t2` (tc, rn, t1, t2). */
   private def brownT2Ctes(src: String, p: String): String =
-    s"""${p}monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM $src GROUP BY department, gl_code, year, month),
-       |${p}rn AS (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY department, gl_code, year
-       |                                    ORDER BY month) AS INT) AS rn
-       |  FROM ${p}monthly),
-       |${p}t AS (
-       |  SELECT *, sum(CASE WHEN rn = 1 THEN tc
-       |                     ELSE tc * CAST(pow(2, rn - 2) AS BIGINT) END)
-       |            OVER (PARTITION BY department, gl_code, year ORDER BY rn
-       |                  ROWS UNBOUNDED PRECEDING) AS t1
-       |  FROM ${p}rn),
+    s"""${ewmaTCtes(src, p, "t1")},
        |${p}t2 AS (
        |  SELECT *, sum(CASE WHEN rn = 1 THEN 2 * t1 ELSE t1 END)
        |            OVER (PARTITION BY department, gl_code, year ORDER BY rn
@@ -1608,9 +1542,7 @@ object Warehouse {
     // cached across calls — Staged.ephemeral writes a fresh temp dir);
     // every chain then re-reads a tiny columnar scan.
     val up = graft.sources.Staged.ephemeral(up0)
-    val monthly = stageBarrier(up
-      .groupBy(col("department"), col("gl_code"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc"))
+    val monthly = stageBarrier(rollupCents(up, DeptGlMonth)
       .withColumn("m_idx", col("year") * 12 + col("month") - 1))
     val lastM = monthly.groupBy(col("department"), col("gl_code"))
       .agg(max(col("m_idx")).as("lm_idx"))
@@ -1639,8 +1571,7 @@ object Warehouse {
       .select(col("department"), col("gl_code"),
         col("year").as("b_year"), col("month").as("b_month"),
         col("fcst_next").as("pred_brown"))
-    def errC(pred: Column): Column =
-      round((pred - col("actual")) * 100).cast("long")
+    def errC(pred: Column): Column = cents(pred - col("actual"))
     val joined = held
       .join(lin, Seq("department", "gl_code"))
       .filter(col("forecast_year") === col("h_year") &&
@@ -1761,9 +1692,7 @@ object Warehouse {
     finDeptCorrelationFrom(upserted(spark, dir))
 
   private[graft] def finDeptCorrelationFrom(up: DataFrame): DataFrame = {
-    val monthly = stageBarrier(up
-      .groupBy(col("department"), col("year"), col("month"))
-      .agg(sum(cents(col("amount"))).as("tc")))
+    val monthly = stageBarrier(rollupCents(up, Seq(col("department"), col("year"), col("month"))))
     val d = (c: Column) => c.cast("decimal(38,0)")
     val pairs = monthly.select(col("department").as("dept_a"), col("year"),
         col("month"), col("tc").as("x"))
@@ -1892,9 +1821,8 @@ object Warehouse {
     * derived control total per (year, month, department) — mismatches are
     * exactly the sheets whose source rows arrived as unparseable N/A. */
   def finReconciliation(spark: SparkSession, dir: String): DataFrame = {
-    val det = factStaged(spark, dir, "year", "month", "department", "amount")
-      .groupBy(col("year"), col("month"), col("department"))
-      .agg(sum(cents(col("amount"))).as("dc"))
+    val det = rollupCents(factStaged(spark, dir, "year", "month", "department", "amount"),
+      Seq(col("year"), col("month"), col("department")), "dc")
     val k = col("o_orderkey")
     val ctl = Tables.orders(spark, dir).filter(k % 13 =!= 0)
       .groupBy(year(col("o_orderdate")).cast("int").as("year"),
@@ -2056,8 +1984,8 @@ object Warehouse {
     * denominator is zero. The mirror composes from balanceLinesCtes,
     * so the categorization cannot drift from fin_balance_sheet's. */
   def finBsRatios(spark: SparkSession, dir: String): DataFrame = {
-    val c = round(col("amount") * 100).cast("long")
-    def cat(name: String) = sum(when(col("category") === name, c).otherwise(0L))
+    def cat(name: String) =
+      sum(when(col("category") === name, cents(col("amount"))).otherwise(0L))
     val agg = finBalanceSheet(spark, dir)
       .groupBy(col("sheet"))
       .agg(cat("Assets").as("ac"), cat("Liability").as("lc"), cat("Equity").as("ec"))
@@ -2065,10 +1993,10 @@ object Warehouse {
       when(den === 0L, lit(null).cast("double"))
         .otherwise(round(num.cast("double") / den.cast("double"), 6) + 0.0)
     agg.select(col("sheet"),
-      (col("ac").cast("double") / 100.0).as("assets"),
-      (col("lc").cast("double") / 100.0).as("liabilities"),
-      (col("ec").cast("double") / 100.0).as("equity"),
-      ((col("ac") - col("lc") - col("ec")).cast("double") / 100.0).as("residual"),
+      dollars(col("ac")).as("assets"),
+      dollars(col("lc")).as("liabilities"),
+      dollars(col("ec")).as("equity"),
+      dollars(col("ac") - col("lc") - col("ec")).as("residual"),
       ratio(col("lc"), col("ec")).as("debt_to_equity"),
       ratio(col("ec"), col("ac")).as("equity_ratio"),
       ratio(col("lc"), col("ac")).as("liability_share"))

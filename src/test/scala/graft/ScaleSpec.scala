@@ -224,4 +224,13 @@ class ScaleSpec extends SparkSpec {
       assert(e.getMessage == s"SPARK_GRAFT_CPUS must be a positive integer, got '$bad'")
     }
   }
+
+  test("Bench's pass count is SPARK_GRAFT_BENCH_PASSES, else 3; a bad value is rejected") {
+    assert(Bench.passesFrom(None) == 3)
+    assert(Bench.passesFrom(Some("5")) == 5)
+    for (bad <- Seq("0", "-1", "three", "")) {
+      val e = intercept[IllegalArgumentException](Bench.passesFrom(Some(bad)))
+      assert(e.getMessage == s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$bad'")
+    }
+  }
 }

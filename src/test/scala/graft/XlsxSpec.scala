@@ -133,6 +133,39 @@ class XlsxSpec extends SparkSpec {
     assert(gl.count() > 0)
   }
 
+  test("writeBack keeps the kept sheets' formulas and the workbook's styles") {
+    // zip entries of a workbook, and the part a named sheet lives in
+    def zipParts(p: String): Map[String, Array[Byte]] = {
+      val zin = new java.util.zip.ZipInputStream(
+        java.nio.file.Files.newInputStream(java.nio.file.Paths.get(p)))
+      try Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
+        .map(e => e.getName -> zin.readAllBytes()).toMap
+      finally zin.close()
+    }
+    def sheetPart(parts: Map[String, Array[Byte]], sheet: String): String = {
+      def text(n: String) = new String(parts(n), "UTF-8")
+      val rid = raw"""<sheet name="$sheet"[^>]*r:id="([^"]+)"""".r
+        .findFirstMatchIn(text("xl/workbook.xml")).get.group(1)
+      val target = raw"""<Relationship Id="$rid"[^>]*Target="([^"]+)"""".r
+        .findFirstMatchIn(text("xl/_rels/workbook.xml.rels")).get.group(1)
+      text("xl/" + target.stripPrefix("/").stripPrefix("xl/"))
+    }
+    def formulas(xml: String) = "<f>[^<]*</f>".r.findAllIn(xml).toList
+
+    val fact = Warehouse.factFrom(Xlsx.statementsXlsx(spark, income))
+    val out = java.nio.file.Files.createTempFile("graft-wb-", ".xlsx")
+    val after = try {
+      Xlsx.writeBack(warehouseWb, out.toString,
+        fact.select(col("gl_code"), col("amount")).limit(5), fact.select(col("gl_code")).limit(3))
+      zipParts(out.toString)
+    } finally java.nio.file.Files.deleteIfExists(out)
+    val before = zipParts(warehouseWb)
+    val summaryFormulas = formulas(sheetPart(before, "Summary"))
+    assert(summaryFormulas.exists(_.contains("SUMIFS")))
+    assert(formulas(sheetPart(after, "Summary")) == summaryFormulas)
+    assert(after.get("xl/styles.xml").map(_.toSeq) == before.get("xl/styles.xml").map(_.toSeq))
+  }
+
   test("sheetByHeaders extracts the GL reference sheet from the warehouse workbook") {
     val gl = Xlsx.sheetByHeaders(spark, warehouseWb, Seq("GL#", "Description"))
       .filter(col("sheet") === "GL")
