@@ -417,10 +417,7 @@ object Analytics {
   /** monthSpine's `actual` and `dims` in SQL. */
   private val monthSpineCtes: String =
     s"""${Warehouse.factCtes},
-       |actual AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM fin_fact GROUP BY department, gl_code, year, month),
+       |${Warehouse.rollupCentsCte("actual", "fin_fact")},
        |dims AS (
        |  SELECT department, gl_code, year, m.month
        |  FROM (SELECT DISTINCT department, gl_code, year FROM fin_fact)

@@ -28,22 +28,20 @@ object TrainPrep {
   /** Production-shaped staged per-doc SIGNAL frame (r13): the text
     * family's expensive per-doc map work — the BPE-ish token regex, the
     * whitespace word count, and the integer unique-word quality ratio
-    * q16 — computed ONCE per JVM per source dir and written through the
-    * partitioned sink (lang directories, the corpus's natural partition),
-    * then read back as a plain parquet table. This is the warehouse
-    * stagedUpserted convention applied to the corpus family: the r12
-    * sf100 probe showed the re-paid tokenize as the family's shared
-    * scale floor (every packing/budget query re-ran the token regex over
-    * 5M docs); at 100 TB the tokenize runs once per ingest into exactly
-    * this signal table and every downstream packer, budgeter, and
-    * sampler scans five integer columns. The _staged twins below are
-    * that production shape, oracled against the SAME SQL as their
-    * in-query twins (the parquet round-trip is bit-exact: BIGINT
-    * columns only, lang restored from the directory key). Caching,
-    * content-fingerprint invalidation, and shutdown cleanup live in
-    * sources.Staged (r14). */
+    * q16 — computed ONCE per JVM per source dir and written as one flat
+    * parquet table (no reader filters on lang), then read back as a plain
+    * scan. This is the warehouse stagedUpserted convention applied to the
+    * corpus family: the r12 sf100 probe showed the re-paid tokenize as
+    * the family's shared scale floor (every packing/budget query re-ran
+    * the token regex over 5M docs); at 100 TB the tokenize runs once per
+    * ingest into exactly this signal table and every downstream packer,
+    * budgeter, and sampler scans its integer columns. The _staged twins
+    * below are that production shape, oracled against the SAME SQL as
+    * their in-query twins (the parquet round-trip is bit-exact for every
+    * column). Caching, content-fingerprint invalidation, and shutdown
+    * cleanup live in sources.Staged (r14). */
   def stagedDocSignals(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Staged.table(spark, "docsig", dir, Seq("lang")) {
+    graft.sources.Staged.table(spark, "docsig", dir) {
       Tables.documents(spark, dir).select(
         col("doc_id"), col("source"),
         expr("CAST(size(array_distinct(split(text, ' '))) * CAST(65536 AS BIGINT)" +

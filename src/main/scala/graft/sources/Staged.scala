@@ -3,8 +3,9 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-JVM staged signal tables: compute a per-doc (or per-row) signal
-  * projection ONCE per source dir, write it through the parquet sink,
-  * and hand every downstream query a plain integer/array scan — the
+  * projection ONCE per source dir, write it as one flat parquet table,
+  * and hand every downstream query a plain integer/array scan (read
+  * through Tables.parquet, so no query build infers its schema) — the
   * warehouse stagedUpserted convention generalized for the _staged
   * query twins (text_pack_ffd_staged, dedup_minhash_lsh_staged, …).
   * At 100 TB this is the production shape: tokenize/hash once per
@@ -45,7 +46,7 @@ object Staged {
 
   /** (n_files, total_bytes, max_mtime) walk — cheap relative to any
     * staging job, and enough to catch replace/append within a JVM. */
-  private def fingerprint(dir: String): String = {
+  private[sources] def fingerprint(dir: String): String = {
     var n = 0L; var bytes = 0L; var mtime = 0L
     def walk(f: java.io.File): Unit =
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(walk))
@@ -64,7 +65,7 @@ object Staged {
     * columnar size and squatted on memory/disk), while parquet's
     * delta/dictionary encodings make each re-scan a cheap columnar
     * read through the OS page cache. NOT cached across calls — each
-    * call writes its own dir. */
+    * call writes its own dir, so it is read without the schema cache. */
   def ephemeral(df: DataFrame): DataFrame = {
     val p = tempDir("graft-ephem-")
     df.write.mode("overwrite").parquet(p)
@@ -73,21 +74,19 @@ object Staged {
 
   /** The staged table for (`name`, `dir`): built by `build` on first
     * use this JVM (or after the dir's content changes), then read back
-    * as plain parquet. `partitionBy` columns become directory keys.
-    * Stage NARROW signal tables (ints, hashes, short arrays) — staging
-    * wide string-array columns both OOMs the default-128MB-row-group
-    * writers at scale and reads back SLOWER than recomputing from text
-    * (the r14 gram-array experiment: 237 s vs 127 s at sf100). */
-  def table(spark: SparkSession, name: String, dir: String,
-            partitionBy: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
+    * as plain, unpartitioned parquet. Stage NARROW signal tables (ints,
+    * hashes, short arrays) — staging wide string-array columns both OOMs
+    * the default-128MB-row-group writers at scale and reads back SLOWER
+    * than recomputing from text (the r14 gram-array experiment: 237 s vs
+    * 127 s at sf100). */
+  def table(spark: SparkSession, name: String, dir: String)(build: => DataFrame): DataFrame = {
     val key = s"$name|$dir|${fingerprint(dir)}"
     val path = paths.computeIfAbsent(key, _ => {
       val p = tempDir(s"graft-$name-")
-      if (partitionBy.isEmpty) build.write.mode("overwrite").parquet(p)
-      else Ingest.writePartitioned(build, p, partitionBy)
+      build.write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** Two staged tables produced by ONE build (an index and its sidecar
@@ -108,6 +107,6 @@ object Staged {
       b.write.mode("overwrite").parquet(s"$p/b")
       p
     })
-    (spark.read.parquet(s"$path/a"), spark.read.parquet(s"$path/b"))
+    (Tables.parquet(spark, s"$path/a"), Tables.parquet(spark, s"$path/b"))
   }
 }

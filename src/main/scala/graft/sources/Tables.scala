@@ -1,6 +1,8 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Schema'd loaders for the test star schema.
   *
@@ -8,12 +10,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and prunes columns into these scans, so *callers must select/filter on
   * the loaded frame directly* (never cache a fully-materialized table
   * first) — at 100 TB the difference is reading 2 columns vs 40.
+  *
+  * Every read of a source or staged table goes through [[parquet]]: Spark
+  * infers a parquet path's schema with a job that reads a footer, so the
+  * schema is inferred once per session and per path content, and each
+  * later query reads with it given.
   */
 object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
+  /** Session -> (path | content fingerprint) -> inferred schema. Sessions
+    * are held weakly (a WeakHashMap compares keys by reference here, as
+    * SparkSession keeps Object's equals); the session is in the key
+    * because its conf (e.g. `spark.sql.legacy.parquet.nanosAsLong`)
+    * decides the inferred types. */
+  private val schemas =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, StructType]]())
+
+  /** `spark.read.parquet(path)`, with the schema inferred on the session's
+    * first read of `path` and again only after its content changes
+    * (`Staged.fingerprint`: a rewrite in place is read with its new
+    * schema). */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val bySession = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, StructType]())
+    val schema = bySession.computeIfAbsent(s"$path|${Staged.fingerprint(path)}",
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(path(dir, name))
+    parquet(spark, path(dir, name))
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -49,6 +49,14 @@ object Warehouse {
   private[graft] def rollupCents(df: DataFrame, keys: Seq[Column], out: String = "tc"): DataFrame =
     df.groupBy(keys: _*).agg(sum(cents(col("amount"))).as(out))
 
+  /** rollupCents over DeptGlMonth in the oracle SQL: the CTE `name` over
+    * the source CTE `src`, with `extra` select items after `tc`. */
+  private[graft] def rollupCentsCte(name: String, src: String, extra: String*): String =
+    s"""$name AS (
+       |  SELECT department, gl_code, year, month,
+       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc${extra.map(",\n         " + _).mkString}
+       |  FROM $src GROUP BY department, gl_code, year, month)""".stripMargin
+
   // ------------------------------------------------------------- pipeline
 
   /** Statements with the section-marker category forward-filled
@@ -188,10 +196,7 @@ object Warehouse {
   /** The monthly (department, GL) cents rollup of the upserted fact. */
   private val monthlyCtes: String =
     s"""$upsertCtes,
-       |fin_monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM fin_upserted GROUP BY department, gl_code, year, month)""".stripMargin
+       |${rollupCentsCte("fin_monthly", "fin_upserted")}""".stripMargin
 
   /** Monthly Revenue per department (`rv`), its calendar-month rollup
     * (`bm`) and department totals (`bd`): the seasonality base. */
@@ -548,20 +553,20 @@ object Warehouse {
        |ORDER BY year, department, category, gl_code, month""".stripMargin
 
   /** Production-shaped staged warehouse: the upserted fact written ONCE
-    * per JVM per source dir through the partitioned sink (year/month
-    * directories, the warehouse's natural partitions), then read back as
-    * a plain parquet table. The in-query fin_* family re-derives the
-    * statements parse + upsert inside every query — honest, but
-    * unamortized; at 100 TB the parse+upsert runs once per load into
-    * exactly this kind of table and every downstream reader just scans
-    * it. The staged trend/ytd variants below are that production shape,
-    * oracled against the SAME SQL as their in-query twins (the parquet
-    * round-trip is bit-exact for every column). It is a Staged.table:
-    * re-staged when the dir's content changes, removed at JVM exit; the
-    * write happens at first construction (not for plan-only tooling). */
+    * per JVM per source dir as one flat parquet table, then read back as
+    * a plain scan (none of its readers filters on year or month, so
+    * year/month directories would only add files for each scan to open).
+    * The in-query fin_* family re-derives the statements parse + upsert
+    * inside every query — honest, but unamortized; at 100 TB the
+    * parse+upsert runs once per load into exactly this kind of table and
+    * every downstream reader just scans it. The staged trend/ytd variants
+    * below are that production shape, oracled against the SAME SQL as
+    * their in-query twins (the parquet round-trip is bit-exact for every
+    * column). It is a Staged.table: re-staged when the dir's content
+    * changes, removed at JVM exit; the write happens when a query over it
+    * is first built. */
   def stagedUpserted(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Staged.table(spark, "staged", dir, partitionBy = Seq("year", "month"))(
-      upserted(spark, dir))
+    graft.sources.Staged.table(spark, "staged", dir)(upserted(spark, dir))
 
   /** fin_trend_mom: month-over-month movement per (department, GL). */
   def finTrendMom(spark: SparkSession, dir: String): DataFrame =
@@ -978,11 +983,7 @@ object Warehouse {
     * fin_forecast_eval's truncated-series leg (the ngramDupsCtes drift
     * rule). Ends at `${p}lines`. */
   private def linearLinesCtes(src: String, p: String): String =
-    s"""${p}monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc,
-       |         year*12 + month - 1 AS m_idx
-       |  FROM $src GROUP BY department, gl_code, year, month),
+    s"""${rollupCentsCte(s"${p}monthly", src, "year*12 + month - 1 AS m_idx")},
        |${p}shifted AS (
        |  SELECT *, m_idx - min(m_idx) OVER (PARTITION BY department, gl_code) AS x
        |  FROM ${p}monthly),
@@ -1391,10 +1392,7 @@ object Warehouse {
     * upserted-shaped source CTE — shared by finEwmaSql, the Brown chain
     * and fin_forecast_eval (drift rule). Ends at `${p}t` (tc, rn, `t1`). */
   private def ewmaTCtes(src: String, p: String, t1: String = "num"): String =
-    s"""${p}monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc
-       |  FROM $src GROUP BY department, gl_code, year, month),
+    s"""${rollupCentsCte(s"${p}monthly", src)},
        |${p}rn AS (
        |  SELECT *, CAST(row_number() OVER (PARTITION BY department, gl_code, year
        |                                    ORDER BY month) AS INT) AS rn
@@ -1605,11 +1603,7 @@ object Warehouse {
 
   val finForecastEvalSql: String =
     s"""WITH $upsertCtes,
-       |ev_monthly AS (
-       |  SELECT department, gl_code, year, month,
-       |         sum(CAST(round(amount*100) AS BIGINT)) AS tc,
-       |         year*12 + month - 1 AS m_idx
-       |  FROM fin_upserted GROUP BY department, gl_code, year, month),
+       |${rollupCentsCte("ev_monthly", "fin_upserted", "year*12 + month - 1 AS m_idx")},
        |ev_last AS (SELECT department, gl_code, max(m_idx) AS lm_idx
        |            FROM ev_monthly GROUP BY department, gl_code),
        |ev_held AS (

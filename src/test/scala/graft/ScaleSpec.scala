@@ -126,7 +126,7 @@ class ScaleSpec extends SparkSpec {
     // known at runtime, so static pruning can't help — Spark must inject a
     // dynamicpruning subquery into the fact scan's PartitionFilters so
     // only matching year directories are listed and read.
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val dir = temp("graft-dpp")
     val o = Tables.orders(spark, sf)
       .withColumn("o_year", year(col("o_orderdate")))
     graft.sources.Ingest.writePartitioned(o, s"$dir/fact", Seq("o_year"))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.{Ingest, Staged, Tables}
@@ -10,11 +9,8 @@ import scala.jdk.CollectionConverters._
 /** Round-trip specs for the non-parquet sources and partitioned sink. */
 class SourcesSpec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString
-
   test("csv round-trip: statements -> csv -> factFrom matches the direct path") {
-    val out = tmp("stmt-csv")
+    val out = temp("graft-stmt-csv")
     val direct = Statements.income(spark, sf)
     direct.coalesce(1).write.mode("overwrite").option("header", "true").csv(out)
     val viaCsv = Ingest.statementsCsv(spark, out)
@@ -26,7 +22,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("json round-trip with explicit schema preserves values and types") {
-    val out = tmp("events-json")
+    val out = temp("graft-events-json")
     val src = Tables.eventsUs(spark, sf)
       .select("event_id", "user_id", "event_type", "ts_us", "value")
     src.coalesce(1).write.mode("overwrite").json(out)
@@ -43,7 +39,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc round-trip preserves values (columnar alternative to parquet)") {
-    val out = tmp("orders-orc")
+    val out = temp("graft-orders-orc")
     val src = Tables.orders(spark, sf)
     src.coalesce(1).write.mode("overwrite").orc(out)
     val back = spark.read.schema(src.schema).orc(out)
@@ -54,7 +50,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned parquet write prunes partitions on filtered read") {
-    val out = tmp("wh-part")
+    val out = temp("graft-wh-part")
     val wh = SparkEntry.queries("fin_warehouse_build")(spark, sf)
     Ingest.writePartitioned(wh, out, Seq("year", "department"))
     val back = spark.read.parquet(out)
@@ -69,17 +65,6 @@ class SourcesSpec extends SparkSpec {
     val scan = one.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") && scan.contains(s"(year") &&
       scan.contains("(department"), s"expected partition filters in scan:\n$scan")
-  }
-
-  test("staged warehouse reader prunes its year/month partitions") {
-    val staged = graft.warehouse.Warehouse.stagedUpserted(spark, sf)
-    val years = staged.select("year").distinct().collect().map(_.getInt(0))
-    assert(years.length > 1, "need multiple partitions to prove pruning")
-    val one = staged.filter(col("year") === years.max)
-    val scan = one.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") && scan.contains("(year"),
-      s"expected year partition filter in staged scan:\n$scan")
-    assert(one.count() == staged.filter(col("year") === years.max).count())
   }
 
   test("a staged build that throws still leaves its temp dir registered for removal") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.streaming.WarehouseStream
 import graft.warehouse.Warehouse
@@ -24,9 +22,9 @@ class WarehouseStreamSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted
     assert(ids.length >= 3, "need several batches to split into arrivals")
 
-    val inbox = Files.createTempDirectory("graft-inbox").toString
-    val table = Files.createTempDirectory("graft-wtab").toString + "/warehouse"
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val inbox = temp("graft-inbox")
+    val table = temp("graft-wtab") + "/warehouse"
+    val ckpt = temp("graft-ckpt")
     def arrive(batchIds: Seq[Long]): Unit = batchIds.foreach { b =>
       batches.filter(col("batch") === b).coalesce(1)
         .write.mode("append").parquet(inbox)

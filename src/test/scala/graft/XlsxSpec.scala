@@ -55,7 +55,7 @@ class XlsxSpec extends SparkSpec {
       }
     }
     val good = Seq(("REVENUES", ""), ("1010", "$100.00"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-audit").toString
+    val dir = temp("graft-audit")
     // the reference raises on each of these (build_warehouse.py:27-29, :129);
     // the audit reports them per file instead
     XlsxWrite.writeCells(s"$dir/Financials 13.2024.xlsx",
@@ -100,7 +100,7 @@ class XlsxSpec extends SparkSpec {
       .na.drop()
       .orderBy(col("gl_code"), col("department"), col("amount")).limit(50)
     val missingDf = fact.select(col("gl_code")).distinct().orderBy(col("gl_code")).limit(5)
-    val out = java.nio.file.Files.createTempFile("graft-wb-", ".xlsx").toString
+    val out = temp("graft-wb-", Some(".xlsx"))
     Xlsx.writeBack(warehouseWb, out, finalDf, missingDf)
 
     def cellsOf(p: String) =
@@ -153,12 +153,10 @@ class XlsxSpec extends SparkSpec {
     def formulas(xml: String) = "<f>[^<]*</f>".r.findAllIn(xml).toList
 
     val fact = Warehouse.factFrom(Xlsx.statementsXlsx(spark, income))
-    val out = java.nio.file.Files.createTempFile("graft-wb-", ".xlsx")
-    val after = try {
-      Xlsx.writeBack(warehouseWb, out.toString,
-        fact.select(col("gl_code"), col("amount")).limit(5), fact.select(col("gl_code")).limit(3))
-      zipParts(out.toString)
-    } finally java.nio.file.Files.deleteIfExists(out)
+    val out = temp("graft-wb-", Some(".xlsx"))
+    Xlsx.writeBack(warehouseWb, out,
+      fact.select(col("gl_code"), col("amount")).limit(5), fact.select(col("gl_code")).limit(3))
+    val after = zipParts(out)
     val before = zipParts(warehouseWb)
     val summaryFormulas = formulas(sheetPart(before, "Summary"))
     assert(summaryFormulas.exists(_.contains("SUMIFS")))
