@@ -48,7 +48,7 @@ object GraftSession {
 
   /** The sizing rule (ScaleSpec pins it): bytes-derived, floored at the
     * core count so small SFs keep one wave of full-width tasks, railed
-    * at MaxShufflePartitions. SPARK_GRAFT_SHUFFLE overrides for probes. */
+    * at MaxShufflePartitions. */
   private[graft] def shufflePartitionsFor(bytes: Long, cpus: Int): Int = {
     val fromBytes = math.ceil(bytes.toDouble / TargetPartitionBytes).toInt
     math.min(MaxShufflePartitions, math.max(cpus, fromBytes))
@@ -59,12 +59,6 @@ object GraftSession {
   private[graft] def positiveInt(name: String, v: String): Int =
     v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
       s"$name must be a positive integer, got '$v'"))
-
-  /** Partition count for a session over `sfDir`: env override first,
-    * then the bytes rule. */
-  def partitionsFor(sfDir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE").map(positiveInt("SPARK_GRAFT_SHUFFLE", _))
-      .getOrElse(shufflePartitionsFor(inputBytes(sfDir), cpus))
 
   /** The core count of a session that names no master, given the value
     * of SPARK_GRAFT_CPUS: that value when set, else min(32, nproc), the
@@ -96,23 +90,19 @@ object GraftSession {
   private val LocalMaster = """local\[(\d+|\*)\]""".r
 
   /** Core count of a `local[N]` or `local[*]` master: the shuffle-partition
-    * floor of a session that names no partition count. */
+    * floor of every session. */
   private[graft] def coresOf(master: String): Int = master match {
     case LocalMaster("*") => Runtime.getRuntime.availableProcessors()
     case LocalMaster(n) => n.toInt
     case _ => throw new IllegalArgumentException(
-      s"no core count in master '$master': pass shufflePartitions")
+      s"no core count in master '$master': use local[N] or local[*]")
   }
 
   /** The one session factory: every graft main and spec builds its
     * session here, so all of them run under the same confs. */
   def builder(master: String = s"local[${defaultCpus(sys.env.get("SPARK_GRAFT_CPUS"))}]",
-              shufflePartitions: Int = -1,
               sfDir: String = ""): SparkSession.Builder = {
-    val parts =
-      if (shufflePartitions > 0) shufflePartitions
-      else if (sfDir.nonEmpty) partitionsFor(sfDir, coresOf(master))
-      else coresOf(master)
+    val parts = shufflePartitionsFor(inputBytes(sfDir), coresOf(master))
     SparkSession.builder()
       .master(master)
       .appName("graft")

@@ -31,8 +31,8 @@ object Ann {
   /** Data-sized plane count: max(floor, ceil(log2(n / target))) keeps
     * bucket size ~target as the corpus grows, so per-query candidate
     * work stays bounded instead of growing as n/2^floor. At spec/gate
-    * scales this evaluates to the floor, leaving AnnSpec's recall bound
-    * and the driver's rows-only check on their existing behavior. */
+    * scales this evaluates to the floor; the oracle's `pl` CTE mirrors
+    * the same rule, so the value-for-value check holds at every scale. */
   def adaptivePlanes(rows: Long): Int = {
     val needed = math.ceil(
       math.log(math.max(1L, rows).toDouble / BucketTarget) / math.log(2.0)).toInt
@@ -42,6 +42,17 @@ object Ann {
   private def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
+
+  /** The query set of every driver-held search: the first NQueries
+    * vectors of corpus `e` (vec_id, v) as (q_id, qv). */
+  private def querySet(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("q_id"), col("v").as("qv")).filter(col("q_id") < NQueries)
+
+  /** The same query set collected (one NQueries-row collect) for the
+    * driver-side probe ranking, residual terms and lookup tables. */
+  private def queryRows(e: DataFrame): Seq[(Long, Array[Double])] =
+    e.filter(col("vec_id") < NQueries).select(col("vec_id"), col("v")).collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 
   /** Deterministic ±1 hyperplane component for (table, plane, dim).
     * Shared with Dedup's embedding blocker, whose DuckDB oracle bakes
@@ -72,8 +83,7 @@ object Ann {
     * by neighbor id. The oracle mirrors the identical double fold. */
   def annBruteTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val q = e.select(col("vec_id").as("q_id"), col("v").as("qv")).filter(col("q_id") < NQueries)
-    bruteTopkFrom(e, q)
+    bruteTopkFrom(e, querySet(e))
   }
 
   /** Exact cosine top-k of `queries` (q_id, qv) against corpus `e`
@@ -98,6 +108,41 @@ object Ann {
   /** A cosine as the output's `cos_sim`: rounded to 4 places, -0.0 → 0.0. */
   private def cosSim(cos: Column): Column = (round(cos, 4) + 0.0).as("cos_sim")
 
+  /** The exact two-level top-C shortlist of a scored candidate frame
+    * (q_id, vec_id, `score`): each query keeps its `c` best rows by
+    * (`score`, vec_id), best = highest unless `ascending`. Level 1 is a
+    * window within (q_id, vec_id % 32), so each task holds ~1/32 of the
+    * corpus; level 2 is the true per-query window over ≤ 32·c
+    * survivors. Exact by the corpus_sample_per_group argument: a
+    * query's c best rows are each among their own shard's c best, so
+    * level 1 never evicts a global survivor. (A single q_id window puts
+    * the ENTIRE corpus in every query's partition: one task per query
+    * at any scale.) */
+  private def shortlist(scored: DataFrame, score: String, c: Int,
+      ascending: Boolean = false): DataFrame = {
+    val order = Seq(if (ascending) col(score) else col(score).desc, col("vec_id"))
+    val wShard = Window.partitionBy(col("q_id"), pmod(col("vec_id"), lit(32L))).orderBy(order: _*)
+    val wQuery = Window.partitionBy(col("q_id")).orderBy(order: _*)
+    scored
+      .withColumn("cs", row_number().over(wShard)).filter(col("cs") <= c)
+      .withColumn("crank", row_number().over(wQuery)).filter(col("crank") <= c)
+      .select(col("q_id"), col("vec_id"), col(score))
+  }
+
+  /** The exact re-rank every candidate shortlist ends in: each
+    * (q_id, vec_id) candidate fetches its original vector from corpus
+    * `e` (vec_id, v) and its query's vector from the broadcast query
+    * set `qs` (q_id, qv), scores the exact cosine (scale-invariant, so
+    * the output rounds exactly like ann_brute_topk's), and keeps the
+    * top-K. The candidates' other columns ride along for `extra`. */
+  private def rerank(cand: DataFrame, e: DataFrame, qs: DataFrame, extra: Column*): DataFrame = {
+    val carried = cand.columns.toSeq.filterNot(Set("q_id", "vec_id")).map(col)
+    topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
+      .join(broadcast(qs), Seq("q_id"))
+      .select(Seq(col("q_id"), col("vec_id").as("n_id"),
+        Vectors.cosine(col("qv"), col("v")).as("cos")) ++ carried: _*), extra: _*)
+  }
+
   private val cosFoldSql =
     """list_reduce([qv[i]*v[i] for i in range(1, len(qv)+1)], (x, y) -> x + y)
       |    / (sqrt(list_reduce([qv[i]*qv[i] for i in range(1, len(qv)+1)], (x, y) -> x + y))
@@ -116,8 +161,9 @@ object Ann {
   // ----------------------------------------------------------- ann_lsh_topk
   /** Hyperplane-LSH top-k: queries meet only same-bucket vectors (unioned
     * over 6 tables, deduped), exact cosine re-ranks the candidates.
-    * xxhash-free but Spark-computed buckets → rows-only at the driver;
-    * AnnSpec bounds recall@10 against the brute-force baseline. */
+    * The buckets are xxhash-free, so annLshTopkSql recomputes them in
+    * DuckDB and dev/check.py compares the rows value for value; AnnSpec
+    * also bounds recall@10 against the brute-force baseline. */
   def annLshTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     // one scalar job to size the index (same pattern as Dedup.blockPlanes)
@@ -229,48 +275,25 @@ object Ann {
     if (nrm == 0.0) v else v.map(_ / nrm)
   }
 
-  /** IVF (inverted-file) top-k — the other standard ANN scale structure
-    * next to LSH: centroids partition the corpus into cells, a query
-    * probes only its `IvfProbe` nearest cells, exact cosine re-ranks the
-    * candidates — an nlist/nprobe reduction of the scanned corpus per
-    * query, with nlist growing with the corpus (ivfLists).
-    *
-    * TWO-LEVEL assignment (the IMI shape), all deterministic:
-    *  - level 1: C1 ≈ sqrt(nlist) coarse seeds, every (n/C1)-th vector
-    *    by id — no RNG. Assignment is the NearestCell kernel against the
-    *    collected unit-normalized seeds (the classic broadcast index
-    *    state): map-only, no corpus shuffle, generated code independent
-    *    of the centroid count;
-    *  - level 2: within each coarse cell, C2 ≈ sqrt(nlist) sub-seeds
-    *    picked by an evenly-strided row_number over the cell (one
-    *    build-time window shuffle), then ONE Lloyd refinement whose
-    *    sub-centroid means use exact INTEGER micro-unit sums (the
-    *    vec_stats trick) — distributed summation order cannot perturb a
-    *    centroid bit, so cells are reproducible across runs and
-    *    partitionings. Assignment is the NearestSubCell kernel: per-row
-    *    cost is C1 + C2 = O(sqrt(nlist)) dots, NOT nlist;
-    *  - probes: the query set is tiny (NQueries = 20 collected rows), so
-    *    the nprobe-best cells per query are ranked on the driver against
-    *    the same flat centroid table and broadcast-joined against the
-    *    celled corpus — the corpus never shuffles for the search; the
-    *    only wide exchange is the final per-query top-k window over
-    *    ~n·nprobe/nlist candidates. (A large query SET would rank cells
-    *    distributed with the same kernels; the index state is already
-    *    broadcast-shaped.)
-    *
-    * Degenerate corpora (fewer than 2 coarse seeds) fall back to the
-    * exact brute-force scan — greatest()-style argmax over <2 candidates
-    * is where the r5 version could throw at plan construction.
-    *
-    * Index construction runs driver jobs (count, seed collects, Lloyd
-    * sums) when the DataFrame is BUILT — like factStaged, not for
-    * plan-only tooling.
-    *
-    * Engine-seeded cells → rows-only at the driver; AnnSpec bounds
-    * recall@10 against ann_brute_topk and pins determinism. */
   /** The broadcast-shaped two-level index state + the celled corpus. */
   private[graft] case class IvfIndex(celled: DataFrame, coarse: Array[Array[Double]],
-      refinedSub: Array[Array[Array[Double]]], maxSub: Int)
+      refinedSub: Array[Array[Array[Double]]], maxSub: Int) {
+    /** The flat cells as (cell = ci·maxSub + si, refined centroid) in
+      * (ci, si) order: the one centroid table the probe ranking, the
+      * residual kernels and the cell reports read. */
+    val cells: Seq[(Int, Array[Double])] =
+      for (ci <- refinedSub.indices; si <- refinedSub(ci).indices)
+        yield (ci * maxSub + si, refinedSub(ci)(si))
+
+    /** `cells` as a dense array indexed by cell (holes where a coarse
+      * cell has fewer than maxSub sub-cells stay empty — `celled` never
+      * assigns them): the broadcast state CellResidual subtracts against. */
+    lazy val flat: Array[Array[Double]] = {
+      val f = Array.fill(refinedSub.length * maxSub)(Array.empty[Double])
+      cells.foreach { case (cell, c) => f(cell) = c }
+      f
+    }
+  }
 
   /** Build the two-level IVF index over corpus `e` (vec_id, v): coarse
     * seeds → strided sub-seeds → one integer-exact Lloyd step → celled
@@ -368,32 +391,45 @@ object Ann {
     * oracle so cluster assignments cannot drift between mirrors. */
   private[operators] def ivfCtes: String = ivfIndexCtes
 
-  /** Driver-side probe ranking for a collected query set: the nprobe
-    * best flat cells by centroid dot (ties → lower cell), exhaustive
-    * over the flat table — nlist dots × |queries|, bounded. The
-    * distributed twin for query TABLES is the TopCells kernel
-    * (ann_ivf_batch). */
-  private def driverProbes(idx: IvfIndex,
-      qRows: Seq[(Long, Seq[Double])],
-      nprobe: Int = IvfProbe): Seq[(Long, Seq[Double], Int)] = {
-    val flat = for (ci <- idx.refinedSub.indices; si <- idx.refinedSub(ci).indices)
-      yield (ci * idx.maxSub + si, idx.refinedSub(ci)(si))
-    driverProbesFlat(flat, qRows, nprobe)
+  /** 0.0-seeded ascending dot over the shorter of `a` and `b`: the
+    * fold of every driver-side score (probe ranking, residual cell term). */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    val m = math.min(a.length, b.length)
+    while (i < m) { s += a(i) * b(i); i += 1 }
+    s
   }
 
-  /** The same ranking over an explicit (cell, centroid) list — the
-    * staged twin collects this from the index's centroid sidecar. */
-  private def driverProbesFlat(flat: Seq[(Int, Array[Double])],
-      qRows: Seq[(Long, Seq[Double])],
-      nprobe: Int): Seq[(Long, Seq[Double], Int)] =
+  /** Driver-side probe ranking for a collected query set: each query's
+    * `nprobe` best flat cells by raw query·centroid dot (ties → lower
+    * cell), exhaustive over `idx.cells` — nlist dots × |queries|,
+    * bounded. The distributed twin for query TABLES is the TopCells
+    * kernel (ann_ivf_batch). */
+  private def probePairs(idx: IvfIndex, qRows: Seq[(Long, Array[Double])],
+      nprobe: Int): Seq[(Long, Array[Double], Int)] =
     qRows.flatMap { case (qid, qv) =>
-      flat.map { case (cell, c) =>
-        var s = 0.0; var d = 0
-        val m = math.min(qv.length, c.length)
-        while (d < m) { s += qv(d) * c(d); d += 1 }
-        (cell, s)
-      }.sortBy { case (cell, s) => (-s, cell) }.take(nprobe)
+      idx.cells.map { case (cell, c) => (cell, dot(qv, c)) }
+        .sortBy { case (cell, s) => (-s, cell) }.take(nprobe)
         .map { case (cell, _) => (qid, qv, cell) }
+    }
+
+  /** The probe list as the (q_id, qv, cell) frame a probe join broadcasts. */
+  private def driverProbes(idx: IvfIndex, qRows: Seq[(Long, Array[Double])],
+      nprobe: Int = IvfProbe): DataFrame = {
+    val session = idx.celled.sparkSession
+    import session.implicits._
+    probePairs(idx, qRows, nprobe).map { case (qid, qv, cell) => (qid, qv.toSeq, cell) }
+      .toDF("q_id", "qv", "cell")
+  }
+
+  /** The residual searches' probe list (ann_ivfpq_topk, ann_ivf_sq_topk):
+    * per (query, probed cell) the unit query qu and the decomposition's
+    * cell term qu·ru(cell), one driver scalar next to the probe ranking. */
+  private def residualProbes(idx: IvfIndex, qRows: Seq[(Long, Array[Double])])
+      : Seq[(Long, Array[Double], Int, Double)] =
+    probePairs(idx, qRows, IvfProbe).map { case (qid, qv, cell) =>
+      val qu = unit(qv)
+      (qid, qu, cell, dot(qu, idx.flat(cell)))
     }
 
   /** The probe-join/re-rank tail shared by the in-query search and the
@@ -416,25 +452,60 @@ object Ann {
         (Vectors.dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cos")))
   }
 
-  /** The IVF top-K search given a built index — shared by the
-    * registered query (nprobe = IvfProbe) and ann_probe_curve's
-    * depth sweep, so the curve never rebuilds the index per leg. */
-  private def ivfTopkWithIdx(spark: SparkSession, e: DataFrame, idx: IvfIndex,
-      nprobe: Int): DataFrame = {
-    val qRows = e.filter(col("vec_id") < NQueries).select(col("vec_id"), col("v"))
-      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val session = spark
-    import session.implicits._
-    val probes = driverProbes(idx, qRows, nprobe).toDF("q_id", "qv", "cell")
-    ivfTopkFrom(idx.celled, probes)
-  }
+  /** The IVF top-K search given a built index and the collected query
+    * set — shared by the registered query (nprobe = IvfProbe),
+    * ann_probe_curve's depth sweep, ann_probe_apply and
+    * ann_recall_report, so no caller rebuilds the index per leg. */
+  private def ivfTopkWithIdx(idx: IvfIndex, qRows: Seq[(Long, Array[Double])],
+      nprobe: Int): DataFrame =
+    ivfTopkFrom(idx.celled, driverProbes(idx, qRows, nprobe))
 
+  /** IVF (inverted-file) top-k — the other standard ANN scale structure
+    * next to LSH: centroids partition the corpus into cells, a query
+    * probes only its `IvfProbe` nearest cells, exact cosine re-ranks the
+    * candidates — an nlist/nprobe reduction of the scanned corpus per
+    * query, with nlist growing with the corpus (ivfLists).
+    *
+    * TWO-LEVEL assignment (the IMI shape), all deterministic:
+    *  - level 1: C1 ≈ sqrt(nlist) coarse seeds, every (n/C1)-th vector
+    *    by id — no RNG. Assignment is the NearestCell kernel against the
+    *    collected unit-normalized seeds (the classic broadcast index
+    *    state): map-only, no corpus shuffle, generated code independent
+    *    of the centroid count;
+    *  - level 2: within each coarse cell, C2 ≈ sqrt(nlist) sub-seeds
+    *    picked by an evenly-strided row_number over the cell (one
+    *    build-time window shuffle), then ONE Lloyd refinement whose
+    *    sub-centroid means use exact INTEGER micro-unit sums (the
+    *    vec_stats trick) — distributed summation order cannot perturb a
+    *    centroid bit, so cells are reproducible across runs and
+    *    partitionings. Assignment is the NearestSubCell kernel: per-row
+    *    cost is C1 + C2 = O(sqrt(nlist)) dots, NOT nlist;
+    *  - probes: the query set is tiny (NQueries = 20 collected rows), so
+    *    the nprobe-best cells per query are ranked on the driver against
+    *    the same flat centroid table and broadcast-joined against the
+    *    celled corpus — the corpus never shuffles for the search; the
+    *    only wide exchange is the final per-query top-k window over
+    *    ~n·nprobe/nlist candidates. (A large query SET would rank cells
+    *    distributed with the same kernels; the index state is already
+    *    broadcast-shaped.)
+    *
+    * Degenerate corpora (fewer than 2 coarse seeds) fall back to the
+    * exact brute-force scan — greatest()-style argmax over <2 candidates
+    * is where the r5 version could throw at plan construction.
+    *
+    * Index construction runs driver jobs (count, seed collects, Lloyd
+    * sums) when the DataFrame is BUILT — like factStaged, not for
+    * plan-only tooling.
+    *
+    * The cells are engine-seeded but deterministic: annIvfTopkSql
+    * rebuilds the same index in DuckDB (ivfIndexCtes) and dev/check.py
+    * compares the rows value for value; AnnSpec bounds recall@10
+    * against ann_brute_topk and pins determinism. */
   def annIvfTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val n = e.count()
-    buildIvfIndex(e, n) match {
+    buildIvfIndex(e, e.count()) match {
       case None => annBruteTopk(spark, dir)
-      case Some(idx) => ivfTopkWithIdx(spark, e, idx, IvfProbe)
+      case Some(idx) => ivfTopkWithIdx(idx, queryRows(e), IvfProbe)
     }
   }
 
@@ -460,26 +531,18 @@ object Ann {
     * brute scan exactly like the in-query twin. Oracle: ann_ivf_topk's
     * SQL verbatim — the build is deterministic and parquet round-trips
     * doubles exactly, so staged == in-query row for row (AnnSpec). */
-  def annIvfTopkStaged(spark: SparkSession, dir: String): DataFrame = {
-    val session = spark
-    import session.implicits._
-    val (celled0, hier) = stagedIvf(spark, dir)
-    hier match {
+  def annIvfTopkStaged(spark: SparkSession, dir: String): DataFrame =
+    stagedIvf(spark, dir) match {
       case None => annBruteTopk(spark, dir)
-      case Some((_, refinedSub, maxSub)) =>
-        val flat = for (ci <- refinedSub.indices; si <- refinedSub(ci).indices)
-          yield (ci * maxSub + si, refinedSub(ci)(si))
-        val qRows = emb(spark, dir).filter(col("vec_id") < NQueries)
-          .select(col("vec_id"), col("v"))
-          .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-        val probes = driverProbesFlat(flat, qRows, IvfProbe)
-        val probedCells = probes.map(_._3).distinct
-        val celled = celled0
+      case Some(idx) =>
+        val probes = driverProbes(idx, queryRows(emb(spark, dir)))
+        // a local relation: reading its cells back runs no job
+        val probedCells = probes.select(col("cell")).collect().toSeq.map(_.getInt(0)).distinct
+        val celled = idx.celled
           .where(col("cell").isin(probedCells: _*)) // static partition pruning
           .select(col("vec_id"), col("v"), col("cell").cast("int").as("cell"))
-        ivfTopkFrom(celled, probes.toDF("q_id", "qv", "cell"))
+        ivfTopkFrom(celled, probes)
     }
-  }
 
   /** ann_ivf_batch_staged: the distributed-probe batch search off the
     * SAME staged inverted file — the serving twin for query TABLES. The
@@ -493,13 +556,10 @@ object Ann {
     * ann_ivf_topk_staged's isin path makes in the opposite direction. */
   def annIvfBatchStaged(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val q = e.filter(col("vec_id") % 37 === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val (celled0, hier) = stagedIvf(spark, dir)
-    hier match {
+    val q = batchQuerySet(e)
+    stagedIvf(spark, dir) match {
       case None => bruteTopkFrom(e, q)
-      case Some((coarse, refinedSub, maxSub)) =>
-        import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
+      case Some(idx) =>
         // r15: the tail is the shared ivfBatchTail — the r14 path fed
         // the fat probe frame through ivfTopkFrom's EXPLICIT broadcast,
         // the same data-scaled broadcast that killed the in-query twin
@@ -507,11 +567,9 @@ object Ann {
         // the old repartition(cell)'s job of restoring scan-width
         // parallelism over the compact per-cell staged files (measured
         // 62 s vs 12 s at sf10 without it).
-        val celled = celled0.select(col("vec_id"), col("v"),
+        val celled = idx.celled.select(col("vec_id"), col("v"),
           col("cell").cast("int").as("cell"))
-        def topCellsCol(v: Column): Column = kcol(graft.expressions.TopCells(
-          kexp(v), coarse, refinedSub, maxSub, BatchProbeCoarse, IvfProbe))
-        ivfBatchTail(celled, q, topCellsCol)
+        ivfBatchTail(celled, q, topCells(idx, IvfProbe))
     }
   }
 
@@ -519,12 +577,13 @@ object Ann {
     * centroid sidecar carrying the FULL two-level hierarchy — coarse
     * centroids as (ci, -1, vec), refined sub-centroids as (ci, si, vec)
     * — so both the driver-ranked topk probes (flat cells) and the
-    * TopCells batch descent reconstruct the exact in-query index state.
-    * Built once per ingest (Staged.tablePair content-fingerprint
-    * cache); degenerate corpora stage an empty sidecar → None, and
-    * callers fall back to brute force like their in-query twins. */
-  private def stagedIvf(spark: SparkSession, dir: String)
-      : (DataFrame, Option[(Array[Array[Double]], Array[Array[Array[Double]]], Int)]) = {
+    * TopCells batch descent reconstruct the exact in-query index state,
+    * returned as the same IvfIndex the in-query build gives (its
+    * `celled` is the staged file). Built once per ingest
+    * (Staged.tablePair content-fingerprint cache); degenerate corpora
+    * stage an empty sidecar → None, and callers fall back to brute
+    * force like their in-query twins. */
+  private def stagedIvf(spark: SparkSession, dir: String): Option[IvfIndex] = {
     val session = spark
     import session.implicits._
     val (celled, side) = graft.sources.Staged.tablePair(
@@ -548,7 +607,7 @@ object Ann {
     }
     val rows = side.collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    if (rows.isEmpty) (celled, None)
+    if (rows.isEmpty) None
     else {
       val coarse = rows.filter(_._2 == -1).sortBy(_._1).map(_._3)
       val subs = rows.filter(_._2 >= 0)
@@ -556,7 +615,7 @@ object Ann {
       val refinedSub = Array.tabulate(coarse.length) { ci =>
         subs.filter(_._1 == ci).sortBy(_._2).map(_._3)
       }
-      (celled, Some((coarse, refinedSub, maxSub)))
+      Some(IvfIndex(celled, coarse, refinedSub, maxSub))
     }
   }
 
@@ -585,13 +644,15 @@ object Ann {
       case None => ProbeDepths.map(p => annBruteTopk(spark, dir)
         .select(col("q_id"), col("n_id")).limit(0)
         .select(lit(p).as("nprobe"), lit(0L).as("hits"), lit(0.0).as("recall")))
-      case Some(idx) => ProbeDepths.map { p =>
-        ivfTopkWithIdx(spark, e, idx, p).select(col("q_id"), col("n_id"))
-          .join(truth, Seq("q_id", "n_id"), "left_semi")
-          .agg(count(lit(1)).as("hits"))
-          .select(lit(p).as("nprobe"), col("hits"),
-            (round(col("hits").cast("double") / nPairs, 4) + 0.0).as("recall"))
-      }
+      case Some(idx) =>
+        val qRows = queryRows(e)
+        ProbeDepths.map { p =>
+          ivfTopkWithIdx(idx, qRows, p).select(col("q_id"), col("n_id"))
+            .join(truth, Seq("q_id", "n_id"), "left_semi")
+            .agg(count(lit(1)).as("hits"))
+            .select(lit(p).as("nprobe"), col("hits"),
+              (round(col("hits").cast("double") / nPairs, 4) + 0.0).as("recall"))
+        }
     }
     legs.reduce(_ unionAll _).orderBy(col("nprobe"))
   }
@@ -631,15 +692,16 @@ object Ann {
       case Some(idx) =>
         val truth = annBruteTopk(spark, dir).select(col("q_id"), col("n_id"))
         val denom = (NQueries * K).toDouble
+        val qRows = queryRows(e)
         val chosen = ProbeDepths.find { p =>
-          val hits = ivfTopkWithIdx(spark, e, idx, p)
+          val hits = ivfTopkWithIdx(idx, qRows, p)
             .select(col("q_id"), col("n_id"))
             .join(truth, Seq("q_id", "n_id"), "left_semi").count()
           BigDecimal(hits / denom)
             .setScale(4, BigDecimal.RoundingMode.HALF_UP)
             .toDouble >= ProbeRecallTarget
         }.getOrElse(ProbeDepths.max)
-        ivfTopkWithIdx(spark, e, idx, chosen)
+        ivfTopkWithIdx(idx, qRows, chosen)
           .select(lit(chosen).as("nprobe"), col("q_id"), col("rank"),
             col("n_id"), col("cos_sim"))
     }
@@ -701,28 +763,35 @@ object Ann {
     * join beyond that (both sides carry the cell key; the corpus
     * shuffles ONCE on cell, never pairwise).
     *
-    * Engine-seeded cells → rows-only at the driver; AnnSpec bounds
-    * recall@10 ≥ 0.5 on a 1000-query set vs brute force. */
+    * The cells are deterministic: annIvfBatchSql rebuilds the index and
+    * the TopCells descent in DuckDB and dev/check.py compares the rows
+    * value for value; AnnSpec bounds recall@10 ≥ 0.5 on a 1000-query
+    * set vs brute force. */
   def annIvfBatch(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    // a deterministic query TABLE (every 37th vector), not a collected list
-    val q = e.filter(col("vec_id") % 37 === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    annIvfBatchFrom(spark, e, q)
+    annIvfBatchFrom(spark, e, batchQuerySet(e))
   }
+
+  /** The batch searches' query TABLE: every 37th vector as (q_id, qv),
+    * a deterministic table, not a collected list. */
+  private def batchQuerySet(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") % 37 === 0).select(col("vec_id").as("q_id"), col("v").as("qv"))
 
   /** Distributed-probe IVF top-k of `queries` (q_id, qv) against corpus
     * `e` (vec_id, v); brute-force fallback on degenerate corpora. */
-  def annIvfBatchFrom(spark: SparkSession, e: DataFrame, queries: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
-    val n = e.count()
-    buildIvfIndex(e, n) match {
+  def annIvfBatchFrom(spark: SparkSession, e: DataFrame, queries: DataFrame): DataFrame =
+    buildIvfIndex(e, e.count()) match {
       case None => bruteTopkFrom(e, queries)
-      case Some(idx) =>
-        def topCellsCol(v: Column): Column = kcol(graft.expressions.TopCells(
-          kexp(v), idx.coarse, idx.refinedSub, idx.maxSub, BatchProbeCoarse, IvfProbe))
-        ivfBatchTail(idx.celled, queries, topCellsCol)
+      case Some(idx) => ivfBatchTail(idx.celled, queries, topCells(idx, IvfProbe))
     }
+
+  /** The TopCells kernel over `idx`'s broadcast hierarchy: each query
+    * row ranks its own `nprobe` flat cells map-side, descending into
+    * its BatchProbeCoarse best coarse cells. */
+  private def topCells(idx: IvfIndex, nprobe: Int)(v: Column): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
+    kcol(graft.expressions.TopCells(kexp(v), idx.coarse, idx.refinedSub, idx.maxSub,
+      BatchProbeCoarse, nprobe))
   }
 
   /** Salt width for the batch scoring join (guide §2.5, §8): candidate
@@ -825,6 +894,73 @@ object Ann {
   private def pqRerank(n: Long): Int =
     math.max(64L, math.min(1024L, n / 32L)).toInt
 
+  /** The PQ codebook state: refined sub-centroids per subspace. */
+  private case class PqBook(cents: Array[Array[Array[Double]]], dsub: Int, m: Int)
+
+  /** Build the M×ks codebook over array column `v` of `e` (vec_id, v):
+    * strided seeds sliced per subspace, one Lloyd step whose
+    * per-(subspace, code, pos) means are exact integer micro-unit sums.
+    * `normalize` (plain PQ) seeds, codes and averages UNIT vectors;
+    * residual IVF-PQ passes false, because its residuals are
+    * deliberately NOT unit-normalized — their magnitude IS the signal
+    * the codebook spends its 4 bits on (one codebook shared across
+    * cells, the FAISS IVFPQ shape). None when fewer than 2 seed
+    * vectors exist. */
+  private def buildPqCodebook(e: DataFrame, v: String, n: Long,
+      normalize: Boolean): Option[PqBook] = {
+    import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
+    import graft.expressions.PqCodes
+    val stride = math.max(1L, n / PqKs)
+    val seedRows = e.filter(col("vec_id") % stride === 0).orderBy(col("vec_id"))
+      .limit(PqKs).select(col(v)).collect()
+      .map { r => val x = r.getSeq[Double](0).toArray; if (normalize) unit(x) else x }
+    if (seedRows.length < 2) return None
+    val dim = seedRows(0).length
+    val dsub = math.max(1, dim / PqM)
+    val m = dim / dsub
+    val seeds: Array[Array[Array[Double]]] =
+      Array.tabulate(m)(s => seedRows.map(r => r.slice(s * dsub, (s + 1) * dsub)))
+    val nrm = Vectors.norm(col(v))
+    val averaged =
+      if (normalize) when(nrm === lit(0.0), col(v)).otherwise(transform(col(v), x => x / nrm))
+      else col(v)
+    val sums = e
+      .select(kcol(PqCodes(kexp(col(v)), seeds, dsub, normalize)).as("codes"),
+        posexplode(transform(averaged, x => round(x * 1000000).cast("long")))
+          .as(Seq("pos", "x")))
+      // drop tail positions the encoder truncates when dim % PqM != 0
+      // (codes[pos DIV dsub] would be null there and the driver-side
+      // getInt would throw; safe no-op while dim=64/PqM=8 divide evenly)
+      .filter(col("pos") < lit(m * dsub))
+      .select(expr(s"CAST(pos DIV $dsub AS INT)").as("mi"),
+        expr(s"codes[CAST(pos DIV $dsub AS INT)]").as("code"),
+        expr(s"CAST(pos % $dsub AS INT)").as("j"), col("x"))
+      .groupBy(col("mi"), col("code"), col("j"))
+      .agg(sum(col("x")).as("sx"), count(lit(1)).as("cn"))
+      .collect()
+    val refined: Array[Array[Array[Double]]] =
+      Array.tabulate(m)(mi => seeds(mi).map(_.clone()))
+    sums.foreach { r =>
+      refined(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
+        r.getLong(3).toDouble / (r.getLong(4) * 1000000.0)
+    }
+    Some(PqBook(refined, dsub, m))
+  }
+
+  /** Per-query ADC lookup tables against a codebook (ascending-j fold,
+    * matching the pqAdc kernel's loop). */
+  private def pqLuts(qRows: Seq[(Long, Array[Double])], book: PqBook): Seq[(Long, Seq[Seq[Double]])] =
+    qRows.map { case (qid, qv) =>
+      val qu = unit(qv)
+      (qid, (0 until book.m).map { mi =>
+        book.cents(mi).toSeq.map { cent =>
+          var s = 0.0; var i = 0
+          while (i < book.dsub) { s += qu(mi * book.dsub + i) * cent(i); i += 1 }
+          s
+        }
+      })
+    }
+
   /** Product-quantization ANN (Jégou et al., PAMI'11 — the memory-bound
     * 100 TB scale structure next to LSH and IVF): each unit vector is
     * encoded as M=8 sub-centroid codes of ks=16 (4 bits each), so the
@@ -861,134 +997,18 @@ object Ann {
     * registered, and spec-measured (recall ≥ the non-residual
     * yardstick on tight clusters).
     *
-    * Engine-seeded codebook → rows-only at the driver; AnnSpec bounds
-    * recall@10 vs ann_brute_topk, pins determinism and the code shape. */
-  /** The PQ codebook state: refined sub-centroids per subspace. */
-  private case class PqBook(cents: Array[Array[Array[Double]]], dsub: Int, m: Int)
-
-  /** Build the M×ks codebook over corpus `e` (vec_id, v): strided unit
-    * seeds sliced per subspace, one Lloyd step in exact integer
-    * micro-units. None when fewer than 2 seed vectors exist. */
-  private def buildPqCodebook(e: DataFrame, n: Long): Option[PqBook] = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
-    import graft.expressions.PqCodes
-    val stride = math.max(1L, n / PqKs)
-    val seedRows = e.filter(col("vec_id") % stride === 0).orderBy(col("vec_id"))
-      .limit(PqKs).select(col("v")).collect()
-      .map(r => unit(r.getSeq[Double](0).toArray))
-    if (seedRows.length < 2) return None
-    val dim = seedRows(0).length
-    val dsub = math.max(1, dim / PqM)
-    val m = dim / dsub
-    val seeds: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(s => seedRows.map(r => r.slice(s * dsub, (s + 1) * dsub)))
-
-    // one Lloyd step: per-(subspace, code, pos) means of the members'
-    // UNIT subvector values in exact integer micro-units
-    val nrm = Vectors.norm(col("v"))
-    val sums = e
-      .select(col("vec_id"),
-        when(nrm === lit(0.0), col("v"))
-          .otherwise(transform(col("v"), x => x / nrm)).as("u"),
-        kcol(PqCodes(kexp(col("v")), seeds, dsub)).as("codes"))
-      .select(col("codes"),
-        posexplode(transform(col("u"), x => round(x * 1000000).cast("long")))
-          .as(Seq("pos", "x")))
-      // drop tail positions the encoder truncates when dim % PqM != 0
-      // (codes[pos DIV dsub] would be null there and the driver-side
-      // getInt would throw; safe no-op while dim=64/PqM=8 divide evenly)
-      .filter(col("pos") < lit(m * dsub))
-      .select(expr(s"CAST(pos DIV $dsub AS INT)").as("mi"),
-        expr(s"codes[CAST(pos DIV $dsub AS INT)]").as("code"),
-        expr(s"CAST(pos % $dsub AS INT)").as("j"), col("x"))
-      .groupBy(col("mi"), col("code"), col("j"))
-      .agg(sum(col("x")).as("sx"), count(lit(1)).as("cn"))
-      .collect()
-    val refined: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(mi => seeds(mi).map(_.clone()))
-    sums.foreach { r =>
-      refined(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-        r.getLong(3).toDouble / (r.getLong(4) * 1000000.0)
-    }
-    Some(PqBook(refined, dsub, m))
-  }
-
-  /** The IVF index's flat-cell centroid table as a dense array indexed
-    * by cell = ci·maxSub + si (holes where a coarse cell has fewer than
-    * maxSub sub-cells stay empty — `celled` never assigns them). This is
-    * the broadcast state CellResidual subtracts against. */
-  private def flatCents(idx: IvfIndex): Array[Array[Double]] = {
-    val flat = Array.fill(idx.refinedSub.length * idx.maxSub)(Array.empty[Double])
-    for (ci <- idx.refinedSub.indices; si <- idx.refinedSub(ci).indices)
-      flat(ci * idx.maxSub + si) = idx.refinedSub(ci)(si)
-    flat
-  }
-
-  /** Build the residual PQ codebook over `res` (vec_id, r): strided RAW
-    * residual seeds (residuals are deliberately NOT unit-normalized —
-    * their magnitude IS the signal the codebook spends its 4 bits on),
-    * one Lloyd step in exact integer micro-units over the residual
-    * values. One codebook shared across cells, the FAISS IVFPQ shape.
-    * None when fewer than 2 seed vectors exist. */
-  private def buildPqCodebookRes(res: DataFrame, n: Long): Option[PqBook] = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
-    import graft.expressions.PqCodes
-    val stride = math.max(1L, n / PqKs)
-    val seedRows = res.filter(col("vec_id") % stride === 0).orderBy(col("vec_id"))
-      .limit(PqKs).select(col("r")).collect()
-      .map(r => r.getSeq[Double](0).toArray)
-    if (seedRows.length < 2) return None
-    val dim = seedRows(0).length
-    val dsub = math.max(1, dim / PqM)
-    val m = dim / dsub
-    val seeds: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(s => seedRows.map(r => r.slice(s * dsub, (s + 1) * dsub)))
-    val sums = res
-      .select(kcol(PqCodes(kexp(col("r")), seeds, dsub, normalize = false)).as("codes"),
-        posexplode(transform(col("r"), x => round(x * 1000000).cast("long")))
-          .as(Seq("pos", "x")))
-      // drop tail positions the encoder truncates when dim % PqM != 0
-      // (codes[pos DIV dsub] would be null there and the driver-side
-      // getInt would throw; safe no-op while dim=64/PqM=8 divide evenly)
-      .filter(col("pos") < lit(m * dsub))
-      .select(expr(s"CAST(pos DIV $dsub AS INT)").as("mi"),
-        expr(s"codes[CAST(pos DIV $dsub AS INT)]").as("code"),
-        expr(s"CAST(pos % $dsub AS INT)").as("j"), col("x"))
-      .groupBy(col("mi"), col("code"), col("j"))
-      .agg(sum(col("x")).as("sx"), count(lit(1)).as("cn"))
-      .collect()
-    val refined: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(mi => seeds(mi).map(_.clone()))
-    sums.foreach { r =>
-      refined(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-        r.getLong(3).toDouble / (r.getLong(4) * 1000000.0)
-    }
-    Some(PqBook(refined, dsub, m))
-  }
-
-  /** Per-query ADC lookup tables against a codebook (ascending-j fold,
-    * matching the pqAdc kernel's loop). */
-  private def pqLuts(qRows: Seq[(Long, Array[Double])], book: PqBook): Seq[(Long, Seq[Seq[Double]])] =
-    qRows.map { case (qid, qv) =>
-      val qu = unit(qv)
-      (qid, (0 until book.m).map { mi =>
-        book.cents(mi).toSeq.map { cent =>
-          var s = 0.0; var i = 0
-          while (i < book.dsub) { s += qu(mi * book.dsub + i) * cent(i); i += 1 }
-          s
-        }
-      })
-    }
-
+    * The codebook is engine-seeded but deterministic: annPqTopkSql
+    * re-derives it in DuckDB and dev/check.py compares the rows value
+    * for value; AnnSpec bounds recall@10 vs ann_brute_topk, pins
+    * determinism and the code shape. */
   def annPqTopk(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
     import graft.expressions.{PqAdc, PqCodes}
     import spark.implicits._
     val e = emb(spark, dir)
     val n = e.count()
-    val q0 = e.select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .filter(col("q_id") < NQueries)
-    val book = buildPqCodebook(e, n) match {
+    val q0 = querySet(e)
+    val book = buildPqCodebook(e, "v", n, normalize = true) match {
       case None => return bruteTopkFrom(e, q0)
       case Some(b) => b
     }
@@ -1000,57 +1020,13 @@ object Ann {
 
     // per-query ADC lookup tables (queries are NQueries collected rows;
     // a query TABLE would build luts distributed like annIvfBatch)
-    val qRows = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id"), col("v")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    val lutDf = pqLuts(qRows, book).toDF("q_id", "lut")
-
-    val c = pqRerank(n)
-    // Exact two-level top-C (the corpus_sample_per_group argument: a
-    // query's C best-ADC rows are each among their own shard's C best,
-    // so level 1 can never evict a global survivor): first a window
-    // within (q_id, vec_id%32) — each task holds ~1/32 of the corpus —
-    // then the true per-query window over ≤ 32·C survivors. r7's
-    // single q_id window put the ENTIRE encoded corpus in every query's
-    // partition: one task per query at any scale.
-    val wShard = Window.partitionBy(col("q_id"), pmod(col("vec_id"), lit(32L)))
-      .orderBy(col("adc").desc, col("vec_id"))
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc").desc, col("vec_id"))
-    val cand = encoded.crossJoin(broadcast(lutDf))
+    val lutDf = pqLuts(queryRows(e), book).toDF("q_id", "lut")
+    val scored = encoded.crossJoin(broadcast(lutDf))
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("adc", kcol(PqAdc(kexp(col("codes")), kexp(col("lut")))))
-      .withColumn("cs", row_number().over(wShard))
-      .filter(col("cs") <= c)
-      .withColumn("crank", row_number().over(wAdc))
-      .filter(col("crank") <= c)
-      .select(col("q_id"), col("vec_id"))
-
-    // exact re-rank on the original vectors (cosine is scale-invariant,
-    // so output parity with ann_brute_topk's rounding is preserved)
-    topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(q0), Seq("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        Vectors.cosine(col("qv"), col("v")).as("cos")))
+    rerank(shortlist(scored, "adc", pqRerank(n)), e, q0)
   }
 
-  /** The ENTIRE PQ pipeline as a DuckDB mirror (the ann_lsh_topk
-    * dynamic-plane precedent): strided seeds, seed assignment, the
-    * integer-micro-unit Lloyd step, re-encoding, per-query LUTs, ADC
-    * top-C, exact re-rank. Float parity is op-for-op:
-    *  - ss (squared norm) is the same 0.0-seeded ascending fold both
-    *    sides; codes normalize by MULTIPLYING 1/sqrt(ss) (the PqCodes
-    *    kernel's `inv`), while unit vectors u and seeds DIVIDE by
-    *    sqrt(ss) (the declarative transform / `unit` helper) — the SQL
-    *    reproduces each form where each is used;
-    *  - squared distances write (t)*(t), never ^2 (DuckDB pow ≠ x*x in
-    *    the last ulp), folded in ascending j like the kernel loop;
-    *  - argmin/rank ties break to the lowest index/id exactly like the
-    *    kernel's strict `<` scan;
-    *  - Lloyd means are exact BIGINT micro-unit sums divided once;
-    *  - ADC folds the 8 per-subspace lookups in ascending m (sorted
-    *    struct fold), matching pqAdc's loop.
-    * dsub is pinned at 8 (64-dim embeddings), like the LSH oracle's
-    * 64-dim plane literals. */
   /** The PQ codebook + corpus codes as shareable CTEs (pq_-prefixed so
     * they compose with ivfIndexCtes without name collisions): seeds →
     * seed assignment → integer-micro-unit Lloyd → refined codebook →
@@ -1099,6 +1075,24 @@ object Ann {
        |    FROM un CROSS JOIN pq_cent1 c1)
        |  WHERE rn = 1)""".stripMargin
 
+  /** The ENTIRE PQ pipeline as a DuckDB mirror (the ann_lsh_topk
+    * dynamic-plane precedent): strided seeds, seed assignment, the
+    * integer-micro-unit Lloyd step, re-encoding, per-query LUTs, ADC
+    * top-C, exact re-rank. Float parity is op-for-op:
+    *  - ss (squared norm) is the same 0.0-seeded ascending fold both
+    *    sides; codes normalize by MULTIPLYING 1/sqrt(ss) (the PqCodes
+    *    kernel's `inv`), while unit vectors u and seeds DIVIDE by
+    *    sqrt(ss) (the declarative transform / `unit` helper) — the SQL
+    *    reproduces each form where each is used;
+    *  - squared distances write (t)*(t), never ^2 (DuckDB pow ≠ x*x in
+    *    the last ulp), folded in ascending j like the kernel loop;
+    *  - argmin/rank ties break to the lowest index/id exactly like the
+    *    kernel's strict `<` scan;
+    *  - Lloyd means are exact BIGINT micro-unit sums divided once;
+    *  - ADC folds the 8 per-subspace lookups in ascending m (sorted
+    *    struct fold), matching pqAdc's loop.
+    * dsub is pinned at 8 (64-dim embeddings), like the LSH oracle's
+    * 64-dim plane literals. */
   lazy val annPqTopkSql: String = {
     val c = s"greatest(64, least(1024, (SELECT n FROM nn) // 32))"
     s"""WITH $vecBaseCtes,
@@ -1262,75 +1256,55 @@ object Ann {
     * three oracles cannot drift on shared state. Degenerate corpora
     * fall back to brute force. */
   def annIvfPqTopk(spark: SparkSession, dir: String): DataFrame =
-    annIvfPqTopkImpl(spark, emb(spark, dir), residual = true)
+    annIvfPqTopkOn(spark, emb(spark, dir), residual = true)
 
-  /** Spec entry point: either composed variant over an arbitrary
-    * (vec_id, v) corpus frame (queries = vec_id < NQueries). */
+  /** Either composed variant over an arbitrary (vec_id, v) corpus frame
+    * (queries = vec_id < NQueries); the registered query is the
+    * residual one. `pre`: a prebuilt (corpus count, index) so composed
+    * evaluators (ann_recall_report) build the shared IVF structure
+    * ONCE — the build is deterministic, so pre-supplying it cannot
+    * change a row. */
   private[graft] def annIvfPqTopkOn(spark: SparkSession, e: DataFrame,
-      residual: Boolean): DataFrame = annIvfPqTopkImpl(spark, e, residual)
-
-  /** `pre`: a prebuilt (corpus count, index) so composed evaluators
-    * (ann_recall_report) build the shared IVF structure ONCE — the
-    * build is deterministic, so pre-supplying it cannot change a row. */
-  private def annIvfPqTopkImpl(spark: SparkSession, e: DataFrame,
       residual: Boolean,
       pre: Option[(Long, Option[IvfIndex])] = None): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
     import graft.expressions.{CellResidual, PqAdc, PqCodes}
     import spark.implicits._
     val n = pre.map(_._1).getOrElse(e.count())
-    val q0 = e.select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .filter(col("q_id") < NQueries)
+    val q0 = querySet(e)
     val idxOpt = pre.map(_._2).getOrElse(buildIvfIndex(e, n))
     if (idxOpt.isEmpty) return bruteTopkFrom(e, q0)
     val idx = idxOpt.get
-    val flat = flatCents(idx)
-    val qRows = e.filter(col("vec_id") < NQueries).select(col("vec_id"), col("v"))
-      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
 
-    // (PQ-coded corpus, probes carrying the per-(q, cell) base term +
-    // the per-q LUT). In residual mode the codes live on r = u − c(cell)
-    // and ADC decomposes as qu·(c + r̂) = qu·c(cell) + Σ_m lut[m][code]:
-    // the cell term is ONE scalar per (query, probed cell), computed on
-    // the driver next to the probe ranking itself — so one shared
+    // (rows to encode, their vector column, codebook). In residual mode
+    // the codes live on r = u − c(cell) and ADC decomposes as
+    // qu·(c + r̂) = qu·c(cell) + Σ_m lut[m][code]: the cell term is ONE
+    // scalar per (query, probed cell), computed on the driver next to
+    // the probe ranking itself (residualProbes) — so one shared
     // codebook still serves every cell, the FAISS IVFPQ shape.
-    val built: Option[(DataFrame, DataFrame)] =
+    val (coded, v, bookOpt) =
       if (residual) {
         // staged: the codebook build (seed collect + Lloyd) and the
         // final encode are three actions over this frame — one shuffle
         // materializes the cell assignment + residual once (factStaged)
         val res = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
           idx.celled.select(col("vec_id"), col("cell"),
-            kcol(CellResidual(kexp(col("v")), kexp(col("cell")), flat)).as("r"))
+            kcol(CellResidual(kexp(col("v")), kexp(col("cell")), idx.flat)).as("r"))
           .repartition(col("vec_id")))
-        buildPqCodebookRes(res, n).map { book =>
-          val encoded = res.select(col("vec_id"), col("cell"),
-            kcol(PqCodes(kexp(col("r")), book.cents, book.dsub, normalize = false)).as("codes"))
-          val luts = pqLuts(qRows.map { case (q, v) => (q, v.toArray) }, book).toMap
-          val probes = driverProbes(idx, qRows).map { case (qid, qv, cell) =>
-            val qu = unit(qv.toArray)
-            val ru = flat(cell)
-            var s = 0.0; var i = 0
-            val m = math.min(qu.length, ru.length)
-            while (i < m) { s += qu(i) * ru(i); i += 1 }
-            (qid, cell, s, luts(qid))
-          }.toDF("q_id", "cell", "cd", "lut")
-          (encoded, probes)
-        }
-      } else {
-        buildPqCodebook(e, n).map { book =>
-          val encoded = idx.celled.select(col("vec_id"), col("cell"),
-            kcol(PqCodes(kexp(col("v")), book.cents, book.dsub)).as("codes"))
-          val luts = pqLuts(qRows.map { case (q, v) => (q, v.toArray) }, book).toMap
-          val probes = driverProbes(idx, qRows)
-            .map { case (qid, _, cell) => (qid, cell, 0.0, luts(qid)) }
-            .toDF("q_id", "cell", "cd", "lut")
-          (encoded, probes)
-        }
-      }
-    built match {
+        (res, "r", buildPqCodebook(res, "r", n, normalize = false))
+      } else (idx.celled, "v", buildPqCodebook(e, "v", n, normalize = true))
+    bookOpt match {
       case None => bruteTopkFrom(e, q0)
-      case Some((encoded, probes)) =>
+      case Some(book) =>
+        val encoded = coded.select(col("vec_id"), col("cell"),
+          kcol(PqCodes(kexp(col(v)), book.cents, book.dsub, normalize = !residual)).as("codes"))
+        val qRows = queryRows(e)
+        val luts = pqLuts(qRows, book).toMap
+        val terms =
+          if (residual) residualProbes(idx, qRows).map { case (qid, _, cell, cd) => (qid, cell, cd) }
+          else probePairs(idx, qRows, IvfProbe).map { case (qid, _, cell) => (qid, cell, 0.0) }
+        val probes = terms.map { case (qid, cell, cd) => (qid, cell, cd, luts(qid)) }
+          .toDF("q_id", "cell", "cd", "lut")
         val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc").desc, col("vec_id"))
         val cand = broadcast(probes).join(encoded, Seq("cell"))
           .filter(col("q_id") =!= col("vec_id"))
@@ -1338,16 +1312,10 @@ object Ann {
           .withColumn("crank", row_number().over(wAdc))
           .filter(col("crank") <= IvfPqRerank)
           .select(col("q_id"), col("vec_id"))
-        topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-          .join(broadcast(q0), Seq("q_id"))
-          .select(col("q_id"), col("vec_id").as("n_id"),
-            Vectors.cosine(col("qv"), col("v")).as("cos")))
+        rerank(cand, e, q0)
     }
   }
 
-  /** The shared two-level index-construction CTE chain (through the
-    * celled corpus) — one Scala constant so the topk and batch mirrors
-    * can never drift on the index (the ngramDupsCtes lesson). */
   /** Shared base: the corpus as DOUBLE[] plus unit-normalized vectors in
     * BOTH forms (u: division, the declarative transform/`unit`; inv:
     * 1/sqrt multiplier, the PqCodes kernel) — one constant under every
@@ -1363,6 +1331,9 @@ object Ann {
       |          list_reduce([v[i]*v[i] for i in range(1, len(v)+1)], (x, y) -> x + y) AS ss
       |        FROM e))""".stripMargin
 
+  /** The shared two-level index-construction CTE chain (through the
+    * celled corpus) — one Scala constant so the topk and batch mirrors
+    * can never drift on the index (the ngramDupsCtes lesson). */
   private lazy val ivfIndexCtes: String =
     s"""$vecBaseCtes,
        |params AS (
@@ -1466,8 +1437,9 @@ object Ann {
     * centroid, ties to the lower cell — the driver loop's sortBy) →
     * cosine re-rank. Assignment dots use the RAW vector against unit
     * centroids (NearestCell's contract); every fold is 0.0-seeded
-    * ascending; dim pinned at 64 like the LSH plane literals. */
-  /** The IVF top-K mirror at an arbitrary probe depth — ONE builder for
+    * ascending; dim pinned at 64 like the LSH plane literals.
+    *
+    * This is the mirror at an arbitrary probe depth — ONE builder for
     * the registered query (IvfProbe) and every ann_probe_curve leg, so
     * the depths cannot drift from the registered semantics. */
   private def ivfTopkSqlAt(nprobe: Int): String =
@@ -1566,11 +1538,7 @@ object Ann {
           .select(col("q_id"), col("vec_id").as("n_id"),
             Vectors.cosine(col("qv"), col("v")).as("cos")))
       case Some(idx) =>
-        val qRows = e.filter(col("vec_id") < NQueries).select(col("vec_id"), col("v"))
-          .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-        val session = spark
-        import session.implicits._
-        val probes = driverProbes(idx, qRows, FilteredProbe).toDF("q_id", "qv", "cell")
+        val probes = driverProbes(idx, queryRows(e), FilteredProbe)
         val labeled = idx.celled.join(e0.select(col("vec_id"), col("label")), Seq("vec_id"))
         topK(broadcast(probes).join(labeled, Seq("cell"))
           .join(broadcast(q0.select(col("q_id"), col("q_label"))), Seq("q_id"))
@@ -1627,7 +1595,6 @@ object Ann {
     * selective). FULLY oracled through the shared ivfIndexCtes + the
     * TopCells two-step descent mirror. */
   def annFilteredBatch(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
     val e0 = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -1642,9 +1609,6 @@ object Ann {
           .select(col("q_id"), col("vec_id").as("n_id"),
             Vectors.cosine(col("qv"), col("v")).as("cos")))
       case Some(idx) =>
-        def topCellsCol(v: Column): Column = kcol(graft.expressions.TopCells(
-          kexp(v), idx.coarse, idx.refinedSub, idx.maxSub, BatchProbeCoarse,
-          FilteredProbe))
         // r15: same shape as ivfBatchTail — the probe explode carries
         // only (q_id, cell, label, salt) metadata, the corpus side
         // salts so a populous cell's scoring spreads across BatchSalt
@@ -1676,7 +1640,7 @@ object Ann {
           .select(col("q_id"), col("qv"), col("nq"))
         val probed = q
           .select(col("q_id"), col("q_label").as("label"),
-            explode(topCellsCol(col("qv"))).as("cell"))
+            explode(topCells(idx, FilteredProbe)(col("qv"))).as("cell"))
           .withColumn("salt", explode(array((0 until BatchSalt).map(lit): _*)))
           .repartition(width, col("cell"), col("label"), col("salt"))
         topK(probed.join(labeled.repartition(width, col("cell"), col("label"), col("salt")),
@@ -1823,8 +1787,7 @@ object Ann {
     import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
     import graft.expressions.MmrSelect
     val e = emb(spark, dir)
-    val q = e.select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .filter(col("q_id") < NQueries)
+    val q = querySet(e)
     val wShard = Window.partitionBy(col("q_id"), pmod(col("n_id"), lit(32L)))
       .orderBy(col("rel").desc, col("n_id"))
     val wq = Window.partitionBy(col("q_id")).orderBy(col("rel").desc, col("n_id"))
@@ -1965,19 +1928,11 @@ object Ann {
     val n = e.count()
     val out = buildIvfIndex(e, n) match {
       case None => // degenerate corpus: exact scan, same output contract
-        val q = e.select(col("vec_id").as("q_id"), col("v").as("qv"))
-          .filter(col("q_id") < NQueries)
-        broadcast(q).join(e, col("q_id") =!= col("vec_id"))
+        broadcast(querySet(e)).join(e, col("q_id") =!= col("vec_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
             cosSim(Vectors.cosine(col("qv"), col("v"))))
       case Some(idx) =>
-        val qRows = e.filter(col("vec_id") < NQueries)
-          .select(col("vec_id"), col("v"))
-          .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-        val session = spark
-        import session.implicits._
-        val probes = driverProbes(idx, qRows).toDF("q_id", "qv", "cell")
-        broadcast(probes).join(idx.celled, Seq("cell"))
+        broadcast(driverProbes(idx, queryRows(e))).join(idx.celled, Seq("cell"))
           .filter(col("q_id") =!= col("vec_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
             cosSim(Vectors.cosine(col("qv"), col("v"))))
@@ -2034,14 +1989,7 @@ object Ann {
           .agg(count(lit(1)).as("n_members"), min(col("vec_id")).as("min_member"))
           .withColumn("avg_dot", lit(null).cast("double"))
       case Some(idx) =>
-        val session = spark
-        import session.implicits._
-        val cents = (for {
-          ci <- idx.refinedSub.indices
-          si <- idx.refinedSub(ci).indices
-        } yield ((ci * idx.maxSub + si).toLong, idx.refinedSub(ci)(si).toSeq))
-          .toDF("cell", "ru")
-        idx.celled.join(broadcast(cents), Seq("cell"))
+        idx.celled.join(broadcast(cellCentroids(idx)), Seq("cell"))
           .select(col("cell"), col("vec_id"),
             round(Vectors.dot(col("v"), col("ru")) * 1000000).cast("long").as("dot_micro"))
           .groupBy(col("cell"))
@@ -2052,6 +2000,14 @@ object Ann {
               .as("avg_dot"))
           .orderBy(col("cell"))
     }
+  }
+
+  /** The flat centroid table as a (cell, ru) frame — the bounded
+    * nlist-row index state the cell reports broadcast. */
+  private def cellCentroids(idx: IvfIndex): DataFrame = {
+    val session = idx.celled.sparkSession
+    import session.implicits._
+    idx.cells.map { case (cell, ru) => (cell.toLong, ru.toSeq) }.toDF("cell", "ru")
   }
 
   lazy val embedClusterStatsSql: String =
@@ -2090,14 +2046,7 @@ object Ann {
         e.select(col("vec_id"), lit(0L).as("cell"), lit(0.0).as("affinity"),
           lit(0.0).as("cell_mean")).limit(0)
       case Some(idx) =>
-        val session = spark
-        import session.implicits._
-        val cents = (for {
-          ci <- idx.refinedSub.indices
-          si <- idx.refinedSub(ci).indices
-        } yield ((ci * idx.maxSub + si).toLong, idx.refinedSub(ci)(si).toSeq))
-          .toDF("cell", "ru")
-        val dm = idx.celled.join(broadcast(cents), Seq("cell"))
+        val dm = idx.celled.join(broadcast(cellCentroids(idx)), Seq("cell"))
           .select(col("cell").cast("long").as("cell"), col("vec_id"),
             round(Vectors.dot(col("v"), col("ru")) * 1000000).cast("long").as("dm"))
         val d = (c: Column) => c.cast("decimal(38,0)")
@@ -2354,54 +2303,51 @@ object Ann {
     * 2^53, so the compiled VectorDot kernel sums them exactly in any
     * order and score = dot(X,Q)/√dot(X,X) is one IEEE division+sqrt of
     * exact integers, bit-identical cross-engine. The 64-row (mn, mx)
-    * collect is the bounded index-state discipline (Ann.scala:250-252).
+    * collect is the bounded index-state discipline (Ann.MaxLists).
     * Scale: the candidate scan is map-only (20 reconstruction arrays
     * broadcast), the exact two-level shard-then-final top-C avoids any
     * whole-corpus single-query window, re-rank fetches ≤|Q|·C floats. */
   def annSqTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val q0 = e.select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .filter(col("q_id") < NQueries)
-    val dimRows = e.select(posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("pos"))
-      .agg(min(round(col("x") * 1000).cast("long")).as("mn"),
-        max(round(col("x") * 1000).cast("long")).as("mx"),
-        count(lit(1)).as("n"))
-      .collect()
-    if (dimRows.isEmpty) return bruteTopkFrom(e, q0)
-    val n = dimRows.head.getLong(3)
-    val mn = new Array[Long](64); val mx = new Array[Long](64)
-    dimRows.foreach { r => mn(r.getInt(0)) = r.getLong(1); mx(r.getInt(0)) = r.getLong(2) }
-    // integer SQ8 reconstruction per dim, emitted as doubles (≤ ~5e5 —
-    // exact) so the compiled VectorDot kernel scores candidates
-    val reconArr = expr("array(" + (0 until 64).map { d =>
-      if (mx(d) == mn(d)) s"CAST(${mn(d) * 255L}L AS DOUBLE)"
-      else s"CAST(${mn(d)}L * 255L + least(255L, greatest(0L, ((CAST(round(element_at(v, ${d + 1}) * 1000) AS BIGINT) - (${mn(d)}L)) * 255L) DIV ${mx(d) - mn(d)}L)) * ${mx(d) - mn(d)}L AS DOUBLE)"
-    }.mkString(", ") + ")")
+    val q0 = querySet(e)
+    val (n, recon) = sq8Grid(e, "v")
+    if (n == 0) return bruteTopkFrom(e, q0)
     // staged: the non-equi candidate join is a BroadcastNestedLoopJoin,
     // and an unstaged projection under it re-evaluates the 64-branch
     // reconstruction once per JOINED PAIR (|Q|× per corpus row) instead
     // of once per row — measured 4.2 s → ~1 s at sf0.1
     val coded = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
-      e.select(col("vec_id"), reconArr.as("c")))
+      e.select(col("vec_id"), recon.as("c")))
     val qc = coded.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("c").as("qc"))
-    val cRe = pqRerank(n)
     val score = Vectors.dot(col("qc"), col("c")) /
       (sqrt(Vectors.dot(col("qc"), col("qc"))) * sqrt(Vectors.dot(col("c"), col("c"))))
-    val wShard = Window.partitionBy(col("q_id"), pmod(col("vec_id"), lit(32L)))
-      .orderBy(col("sq").desc, col("vec_id"))
-    val wDot = Window.partitionBy(col("q_id")).orderBy(col("sq").desc, col("vec_id"))
-    val cand = broadcast(qc).join(coded, col("q_id") =!= col("vec_id"))
+    val scored = broadcast(qc).join(coded, col("q_id") =!= col("vec_id"))
       .withColumn("sq", score)
-      .withColumn("cs", row_number().over(wShard)).filter(col("cs") <= cRe)
-      .withColumn("crank", row_number().over(wDot)).filter(col("crank") <= cRe)
-      .select(col("q_id"), col("vec_id"), col("sq"))
-    topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-        .join(broadcast(q0), Seq("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          Vectors.cosine(col("qv"), col("v")).as("cos"), col("sq")),
-      (round(col("sq"), 4) + 0.0).as("sq_score"))
+    rerank(shortlist(scored, "sq", pqRerank(n)), e, q0, (round(col("sq"), 4) + 0.0).as("sq_score"))
+  }
+
+  /** The SQ8 grid over array column `c` of `df`, decided in integer
+    * space: one 64-row collect of the per-dim exact milli-unit extrema
+    * (mn, mx), then the reconstruction column X_d = mn_d·255 +
+    * code_d·(mx_d − mn_d), code_d = clamp(((x − mn_d)·255) DIV
+    * (mx_d − mn_d)), as integer-valued doubles (≤ ~5e5, exact);
+    * degenerate dims (mx = mn) code to 0. Returns (row count,
+    * reconstruction); the count is 0 on an empty frame. */
+  private def sq8Grid(df: DataFrame, c: String): (Long, Column) = {
+    val dimRows = df.select(posexplode(col(c)).as(Seq("pos", "x")))
+      .groupBy(col("pos"))
+      .agg(min(round(col("x") * 1000).cast("long")).as("mn"),
+        max(round(col("x") * 1000).cast("long")).as("mx"),
+        count(lit(1)).as("n"))
+      .collect()
+    val mn = new Array[Long](64); val mx = new Array[Long](64)
+    dimRows.foreach { r => mn(r.getInt(0)) = r.getLong(1); mx(r.getInt(0)) = r.getLong(2) }
+    val recon = expr("array(" + (0 until 64).map { d =>
+      if (mx(d) == mn(d)) s"CAST(${mn(d) * 255L}L AS DOUBLE)"
+      else s"CAST(${mn(d)}L * 255L + least(255L, greatest(0L, ((CAST(round(element_at($c, ${d + 1}) * 1000) AS BIGINT) - (${mn(d)}L)) * 255L) DIV ${mx(d) - mn(d)}L)) * ${mx(d) - mn(d)}L AS DOUBLE)"
+    }.mkString(", ") + ")")
+    (dimRows.headOption.map(_.getLong(3)).getOrElse(0L), recon)
   }
 
   lazy val annSqTopkSql: String = {
@@ -2467,7 +2413,7 @@ object Ann {
     * division and ONE addition of the cell term) — bit-identical
     * cross-engine, so the full pipeline oracles through the shared
     * ivfIndexCtes. The 64-row extrema collect is the bounded
-    * index-state discipline (Ann.scala:250-252); the residual frame is
+    * index-state discipline (Ann.MaxLists); the residual frame is
     * STAGED (it feeds the extrema aggregate and the encode).
     *
     * Scale: per-query cost O(√nlist) probe dots + (n·nprobe/nlist)
@@ -2477,49 +2423,30 @@ object Ann {
     annIvfSqTopkOn(spark, emb(spark, dir))
 
   /** Spec entry point over an arbitrary (vec_id, v) corpus frame;
-    * `pre` as in annIvfPqTopkImpl (deterministic prebuilt index). */
+    * `pre` as in annIvfPqTopkOn (deterministic prebuilt index). */
   private[graft] def annIvfSqTopkOn(spark: SparkSession, e: DataFrame,
       pre: Option[(Long, Option[IvfIndex])] = None): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => kcol, expression => kexp}
     import graft.expressions.CellResidual
     import spark.implicits._
     val n = pre.map(_._1).getOrElse(e.count())
-    val q0 = e.select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .filter(col("q_id") < NQueries)
+    val q0 = querySet(e)
     val idxOpt = pre.map(_._2).getOrElse(buildIvfIndex(e, n))
     if (idxOpt.isEmpty) return bruteTopkFrom(e, q0)
     val idx = idxOpt.get
-    val flat = flatCents(idx)
     // staged: the residual frame feeds the extrema aggregate AND the encode
     val res = org.apache.spark.sql.GraftColumnBridge.stageBarrier(
       idx.celled.select(col("vec_id"), col("cell"),
-        kcol(CellResidual(kexp(col("v")), kexp(col("cell")), flat)).as("r")))
-    val dimRows = res.select(posexplode(col("r")).as(Seq("pos", "x")))
-      .groupBy(col("pos"))
-      .agg(min(round(col("x") * 1000).cast("long")).as("mn"),
-        max(round(col("x") * 1000).cast("long")).as("mx"))
-      .collect()
-    val mn = new Array[Long](64); val mx = new Array[Long](64)
-    dimRows.foreach { r => mn(r.getInt(0)) = r.getLong(1); mx(r.getInt(0)) = r.getLong(2) }
-    val reconArr = expr("array(" + (0 until 64).map { d =>
-      if (mx(d) == mn(d)) s"CAST(${mn(d) * 255L}L AS DOUBLE)"
-      else s"CAST(${mn(d)}L * 255L + least(255L, greatest(0L, ((CAST(round(element_at(r, ${d + 1}) * 1000) AS BIGINT) - (${mn(d)}L)) * 255L) DIV ${mx(d) - mn(d)}L)) * ${mx(d) - mn(d)}L AS DOUBLE)"
-    }.mkString(", ") + ")")
+        kcol(CellResidual(kexp(col("v")), kexp(col("cell")), idx.flat)).as("r")))
+    val (_, recon) = sq8Grid(res, "r")
     // NOT staged (unlike ann_sq_topk's coded frame): the cell-keyed
     // probes join gives each corpus row < 1 expected scoring partner
     // (|Q|·nprobe / nlist), so re-evaluating the reconstruction there is
     // cheaper than materializing 64 doubles/row — measured both ways
-    val coded = res.select(col("vec_id"), col("cell"), reconArr.as("x"))
-    val qRows = e.filter(col("vec_id") < NQueries).select(col("vec_id"), col("v"))
-      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val probes = driverProbes(idx, qRows).map { case (qid, qv, cell) =>
-      val qu = unit(qv.toArray)
-      val ru = flat(cell)
-      var s = 0.0; var i = 0
-      val m = math.min(qu.length, ru.length)
-      while (i < m) { s += qu(i) * ru(i); i += 1 }
-      (qid, cell, s, qu.toSeq)
-    }.toDF("q_id", "cell", "cd", "qu")
+    val coded = res.select(col("vec_id"), col("cell"), recon.as("x"))
+    val probes = residualProbes(idx, queryRows(e))
+      .map { case (qid, qu, cell, cd) => (qid, cell, cd, qu.toSeq) }
+      .toDF("q_id", "cell", "cd", "qu")
     val wSq = Window.partitionBy(col("q_id")).orderBy(col("sq").desc, col("vec_id"))
     val cand = broadcast(probes).join(coded, Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
@@ -2528,11 +2455,7 @@ object Ann {
       .withColumn("crank", row_number().over(wSq))
       .filter(col("crank") <= IvfSqRerank)
       .select(col("q_id"), col("vec_id"), col("sq"))
-    topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-        .join(broadcast(q0), Seq("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          Vectors.cosine(col("qv"), col("v")).as("cos"), col("sq")),
-      (round(col("sq"), 4) + 0.0).as("ivfsq_score"))
+    rerank(cand, e, q0, (round(col("sq"), 4) + 0.0).as("ivfsq_score"))
   }
 
   /** The composed IVF-SQ mirror: ivfIndexCtes prunes to probed cells,
@@ -2612,12 +2535,11 @@ object Ann {
     * integer x), the oracle cross-multiplies in HUGEINT — identical
     * bits, so candidate sets and the final report hash-match. The
     * 64-row dim-sum collect is the bounded index-state discipline
-    * (Ann.scala:250-252); rerank depth C = pqRerank(n), mirrored inline
+    * (Ann.MaxLists); rerank depth C = pqRerank(n), mirrored inline
     * from the nn CTE. */
   def annHammingTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val q0 = e.select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .filter(col("q_id") < NQueries)
+    val q0 = querySet(e)
     val dimRows = e.select(posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("pos"))
       .agg(sum(round(col("x") * 1000000).cast("long").cast("decimal(38,0)")).as("s"),
@@ -2640,23 +2562,9 @@ object Ann {
     val sigs = e.select(col("vec_id"), sig.as("sig"))
     val qs = sigs.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("sig").as("qsig"))
-    val c = pqRerank(n)
-    // exact two-level top-C over the Hamming ranking (the ann_pq_topk
-    // shard-then-final shape — a single q_id window would put the whole
-    // corpus in one task per query)
-    val wShard = Window.partitionBy(col("q_id"), pmod(col("vec_id"), lit(32L)))
-      .orderBy(col("ham"), col("vec_id"))
-    val wHam = Window.partitionBy(col("q_id")).orderBy(col("ham"), col("vec_id"))
-    val cand = broadcast(qs).join(sigs, col("q_id") =!= col("vec_id"))
+    val scored = broadcast(qs).join(sigs, col("q_id") =!= col("vec_id"))
       .withColumn("ham", bit_count(col("qsig").bitwiseXOR(col("sig"))).cast("long"))
-      .withColumn("cs", row_number().over(wShard)).filter(col("cs") <= c)
-      .withColumn("crank", row_number().over(wHam)).filter(col("crank") <= c)
-      .select(col("q_id"), col("vec_id"), col("ham"))
-    topK(cand.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-        .join(broadcast(q0), Seq("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          Vectors.cosine(col("qv"), col("v")).as("cos"), col("ham")),
-      col("ham"))
+    rerank(shortlist(scored, "ham", pqRerank(n), ascending = true), e, q0, col("ham"))
   }
 
   lazy val annHammingTopkSql: String = {
@@ -3000,7 +2908,7 @@ object Ann {
           col("hits"),
           (round(col("hits").cast("double") / nPairs, 4) + 0.0).as("recall"))
     val ivfLeg = pre.get._2 match {
-      case Some(idx) => ivfTopkWithIdx(spark, e, idx, IvfProbe)
+      case Some(idx) => ivfTopkWithIdx(idx, queryRows(e), IvfProbe)
       case None => annBruteTopk(spark, dir)
     }
     // bytes/vector of each index's candidate-scan state: raw floats 256
@@ -3008,7 +2916,7 @@ object Ann {
     // binary one 64-bit signature — the r9 memory-recall frontier row set
     leg("hamming", 8, annHammingTopk(spark, dir))
       .unionAll(leg("ivf", 256, ivfLeg))
-      .unionAll(leg("ivfpq", 8, annIvfPqTopkImpl(spark, e, residual = true, pre)))
+      .unionAll(leg("ivfpq", 8, annIvfPqTopkOn(spark, e, residual = true, pre)))
       .unionAll(leg("ivfsq", 64, annIvfSqTopkOn(spark, e, pre)))
       .unionAll(leg("pq", 8, annPqTopk(spark, dir)))
       .unionAll(leg("sq", 64, annSqTopk(spark, dir)))

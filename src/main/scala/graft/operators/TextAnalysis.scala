@@ -205,7 +205,7 @@ object TextAnalysis {
     * (ε=1e-4, δ=0.01 → w=⌈e/ε⌉=27183, d=⌈ln 1/δ⌉=5 — TextSpec asserts
     * both bounds). Probing 20 driver-held keys against the driver-held
     * grid is O(1) — the same bounded-driver-work exception as the IVF
-    * index build (Ann.scala:206).
+    * index build (Ann.MaxLists).
     *
     * r14: the grid's row hashes moved from `stat.countMinSketch`'s
     * seeded Murmur3 to the md5-derived universal-hash lane family

@@ -96,14 +96,13 @@ object Staged {
     * re-running the build that derived either. `partitionBy1` keys the
     * FIRST frame's directory layout (the probe-pruned read path). */
   def tablePair(spark: SparkSession, name: String, dir: String,
-                partitionBy1: Seq[String] = Nil)
+                partitionBy1: Seq[String])
                (build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
     val key = s"$name|$dir|${fingerprint(dir)}"
     val path = paths.computeIfAbsent(key, _ => {
       val p = tempDir(s"graft-$name-")
       val (a, b) = build
-      if (partitionBy1.isEmpty) a.write.mode("overwrite").parquet(s"$p/a")
-      else Ingest.writePartitioned(a, s"$p/a", partitionBy1)
+      Ingest.writePartitioned(a, s"$p/a", partitionBy1)
       b.write.mode("overwrite").parquet(s"$p/b")
       p
     })

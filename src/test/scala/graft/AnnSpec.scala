@@ -1,7 +1,8 @@
 package graft
 
-/** Correctness authority for the LSH ANN variant (rows-only at the
-  * driver) + sanity bounds on the oracled queries. */
+/** Sanity bounds on the ANN queries (recall against brute force,
+  * determinism, plan shape); their rows are checked value for value
+  * against the DuckDB oracles by dev/check.py. */
 class AnnSpec extends SparkSpec {
 
   test("ann_lsh_topk recall@10 >= 0.5 vs brute force") {
@@ -257,15 +258,19 @@ class AnnSpec extends SparkSpec {
 
   test("ann_pq_topk: ADC candidate rank is two-level, never a whole-corpus q_id partition") {
     // Plan pin for the 100x property: the first row_number over the
-    // encoded corpus must be partitioned by (q_id, vec_id%32); only the
-    // ≤32·C survivors take a q_id-only window.
-    val plan = SparkEntry.queries("ann_pq_topk")(spark, sf)
-      .queryExecution.optimizedPlan.toString
-    // the shard key is projected as _w0 := pmod(vec_id, 32) below the window
-    val rnLines = plan.split("\n").filter(_.contains("row_number()"))
-    assert(plan.contains("pmod(vec_id") &&
-      rnLines.exists(l => l.contains("adc") && l.contains("_w0")),
-      s"no shard-level ADC window:\n$plan")
+    // scored corpus must be partitioned by (q_id, vec_id%32); only the
+    // ≤32·C survivors take a q_id-only window. Every caller of the
+    // shared shortlist, each with its own score column.
+    for ((query, score) <- Seq(("ann_pq_topk", "adc"), ("ann_sq_topk", "sq"),
+        ("ann_hamming_topk", "ham"))) {
+      val plan = SparkEntry.queries(query)(spark, sf)
+        .queryExecution.optimizedPlan.toString
+      // the shard key is projected as _w0 := pmod(vec_id, 32) below the window
+      val rnLines = plan.split("\n").filter(_.contains("row_number()"))
+      assert(plan.contains("pmod(vec_id") &&
+        rnLines.exists(l => l.contains(s"$score#") && l.contains("_w0")),
+        s"$query: no shard-level $score window:\n$plan")
+    }
   }
 
   test("ann_ivfpq_topk: composed residual index recall >= 0.5, deterministic") {

@@ -57,7 +57,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
+    val s = GraftSession.builder(master = "local[4]")
       // static conf: saveAsTable targets (ScaleSpec buckets) land in /tmp
       .config("spark.sql.warehouse.dir", temp("graft-warehouse"))
       .getOrCreate()
